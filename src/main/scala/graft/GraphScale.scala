@@ -12,10 +12,10 @@ import graft.graph.{Algorithms, GraphXBridge, LocalExec, PropertyGraph, Traversa
   * 500k-doc corpus soak: generate a ~10M-edge power-law graph (orders of
   * magnitude over [[LocalExec]]'s byte budget, and the knob is forced off
   * anyway), run the DISTRIBUTED formulations the bounded bench graphs
-  * never exercise for time — DataFrame large/small-star CC, the GraphX CC
-  * twin, the synchronous k-core peel, Pregel PageRank, edge-iterator
-  * triangle counting, a deep frontier BFS, the personalized-PageRank
-  * DataFrame loop, and 4-step random-walk sampling — and print one JSON line
+  * never exercise for time — GraphX CC, the synchronous k-core peel,
+  * Pregel PageRank, edge-iterator triangle counting, a deep frontier BFS,
+  * the personalized-PageRank DataFrame loop, and 4-step random-walk
+  * sampling — and print one JSON line
   * with per-op wall seconds AND scheduled job counts. The point is
   * evidence for the 100 TB path: these plans' committed bench rows all
   * route driver-local at bench SFs (by design — see LocalExec), so this
@@ -250,10 +250,7 @@ object GraphScale {
     }
 
     val results = Seq(
-      // the scalable DataFrame formulation (alternating large/small-star)
-      op("cc_dataframe")(Algorithms.connectedComponents(nodes, edges))(
-        _.agg(countDistinct(col("comp"))).head.getLong(0)),
-      // the GraphX twin behind the gated query
+      // the one distributed CC loop, behind the gated query
       op("cc_graphx")(GraphXBridge.connectedComponents(spark, g))(
         _.agg(countDistinct(col("comp"))).head.getLong(0)),
       op("kcore_k3")(Algorithms.kCore(edges, k = 3, rounds = 10))(_.count()),

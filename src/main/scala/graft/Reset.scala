@@ -45,9 +45,9 @@ object Reset {
     if (scratch) clearScratch()
   }
 
-  /** Serializes SCOPED session-conf flips (the shuffle-width scope in
-    * Algorithms.connectedComponents, the checkpoint-manager scope in
-    * InsertBench): two concurrent flips on one session could otherwise
+  /** Serializes SCOPED session-conf flips (the checkpoint-manager scope
+    * in InsertBench, the LocalExec kill-switch scope of GraphOps'
+    * distributed sweep rows): two concurrent flips on one session could otherwise
     * interleave set/restore and strand the wrong value. Same stance as
     * [[writeOnceTable]] — today's drivers are single-threaded, the lock
     * makes the latent race impossible rather than documented-away. (A

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -8,7 +8,9 @@ import org.apache.spark.storage.StorageLevel
   *
   * These cover the analytics a user of the reference would run once a graph
   * is loaded (degree/traversal/shortest-path benches, benchmark.py:103-201),
-  * plus the standard batch-graph suite (CC / PageRank / triangles / LPA).
+  * plus the standard batch-graph suite (SCC / triangles / LPA / centrality).
+  * Connected components and PageRank run on [[GraphXBridge]], whose loops
+  * beat their DataFrame formulations on the same input.
   *
   * Scale design (SURVEY §5): every iteration is a shuffle-on-key join +
   * partial aggregation; state DataFrames are `localCheckpoint`ed per round
@@ -49,120 +51,6 @@ object Algorithms {
         coalesce(col("indeg"), lit(0L)).as("indeg"))
   }
 
-  /** Connected components over the undirected closure of `edges`:
-    * every node is labeled with the minimum node id of its component.
-    *
-    * Min-label propagation with pointer jumping — each round every node
-    * takes the min of (its label, its neighbors' labels), then labels are
-    * compressed by one indirection hop (label := label's label). Jumping
-    * makes rounds O(log diameter)-ish instead of O(diameter); each round is
-    * two shuffle joins + a groupBy-min, no driver-side state (the
-    * large-star/small-star family of map-reduce CC, cf. Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14).
-    *
-    * `numParts > 0` sizes every round's shuffles to the graph instead of
-    * `spark.sql.shuffle.partitions` (same knob as kCore / Traversals.bfs):
-    * a ~50-edge verified-pair graph otherwise pays ~32 near-empty tasks
-    * per pointer-jumping round — pure scheduling noise. Implemented by
-    * scoping the session's shuffle-partition count around the (eagerly
-    * materializing) round loop rather than appending repartition()s,
-    * which would ADD an exchange per round to remove task count. Single-
-    * threaded-driver assumption as elsewhere (Reset.writeOnceTable).
-    * Leave 0 for SF-scaled graphs; default shuffle + AQE is the 100 TB
-    * path.
-    */
-  def connectedComponents(nodes: DataFrame, edges: DataFrame,
-                          numParts: Int = 0, localBounded: Int = 0): DataFrame = {
-    // caller-asserted bounded graph (e.g. the verified near-dup pair
-    // graph): one probe-enforced collect + driver union-find instead of
-    // O(log n) rounds of two shuffle joins each; the probe's limit makes
-    // a wrong assertion a cheap fallback, not a driver OOM
-    if (localBounded > 0 && LocalExec.enabled(nodes.sparkSession))
-      LocalExec.connectedComponents(nodes, edges, localBounded) match {
-        case Some(df) => return df
-        case None => ()
-      }
-    if (numParts <= 0) ccLoop(nodes, edges)
-    else graft.Reset.confFlip.synchronized {
-      // conf flip held under the shared scope lock (see Reset.confFlip)
-      val spark = nodes.sparkSession
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, numParts.toString)
-      try ccLoop(nodes, edges) finally spark.conf.set(key, prev)
-    }
-  }
-
-  private def ccLoop(nodes: DataFrame, edges: DataFrame): DataFrame = {
-      val und = {
-        val e = edges.select(col("src"), col("dst"))
-        e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-          .distinct().repartition(col("dst"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
-      var labels = nodes.select(col("id").as("node"), col("id").as("comp"))
-        .localCheckpoint()
-      var changed = 1L
-      while (changed > 0) {
-        // neighbor-min: for each node the smallest label among its neighbors
-        val nbrMin = und
-          .join(labels.withColumnRenamed("node", "dst2"),
-            col("dst") === col("dst2"))
-          .groupBy(col("src").as("node"))
-          .agg(min(col("comp")).as("nmin"))
-        val stepped = labels.join(nbrMin, Seq("node"), "left")
-          .select(col("node"), col("comp"),
-            least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp1"))
-        // pointer jump: comp2 = label(comp1)
-        val jump = labels.select(col("node").as("jnode"), col("comp").as("jcomp"))
-        val next = stepped.join(jump, col("comp1") === col("jnode"), "left")
-          .select(col("node"), col("comp"),
-            least(col("comp1"), coalesce(col("jcomp"), col("comp1"))).as("newcomp"))
-          .localCheckpoint()
-        changed = next.filter(col("newcomp") =!= col("comp")).count()
-        // a plain projection off the already-checkpointed `next`: its
-        // lineage is one node deep, so a second checkpoint would only buy
-        // a redundant materialization job per round
-        labels = next.select(col("node"), col("newcomp").as("comp"))
-      }
-      und.unpersist()
-      labels
-  }
-
-  /** PageRank, damping `d`, fixed `iters` iterations, uniform init 1/N.
-    *   r(v) = (1-d)/N + d * Σ_{u→v} r(u)/outdeg(u)
-    * Dangling nodes contribute nothing (matches the unrolled SQL oracle).
-    * Contribution pass = one shuffle join + groupBy-sum per iteration;
-    * ranks checkpointed per round.
-    */
-  def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int, d: Double = 0.85,
-               ckptEvery: Int = 3): DataFrame = {
-    val n = nodes.count().toDouble
-    // pre-join outdeg onto edges once: the per-iteration join is then a
-    // single shuffle-on-src with ranks
-    val e = edges.select(col("src"), col("dst"))
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val ew = e.join(outdeg, Seq("src")).repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var ranks = nodes.select(col("id").as("node"), (lit(1.0) / n).as("rank"))
-      .localCheckpoint()
-    for (i <- 1 to iters) {
-      val contribs = ew
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"), (col("rank") / col("outdeg")).as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("csum"))
-      val next = nodes.select(col("id").as("node"))
-        .join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (lit((1 - d) / n) + lit(d) * coalesce(col("csum"), lit(0.0))).as("rank"))
-      // checkpoint on a cadence: every round is overkill for lineage
-      // control and each checkpoint is a full materializing job
-      ranks = if (i % ckptEvery == 0 || i == iters) next.localCheckpoint() else next
-    }
-    ew.unpersist()
-    ranks
-  }
-
   /** Personalized PageRank — PageRank with the teleport vector
     * concentrated on ONE source node instead of uniform:
     *   r(v) = (1-d)·[v = source] + d · Σ_{u→v} r(u)/outdeg(u),
@@ -174,7 +62,7 @@ object Algorithms {
     * reduction-order-independent, which is what licenses both the local
     * twin and the DuckDB oracle to reproduce it bit-for-bit).
     *
-    * Same distributed shape as [[pageRank]]: outdeg pre-joined onto the
+    * Distributed shape: outdeg pre-joined onto the
     * edge relation once (persisted, reused every round), one
     * shuffle-join + groupBy-sum per iteration, ranks checkpointed on a
     * cadence. Plan-statistics-bounded graphs take the driver-local twin
@@ -333,8 +221,8 @@ object Algorithms {
   }
 
   /** Strongly connected components as a DataFrame trim+coloring loop —
-    * the at-scale replacement for the GraphX coloring SCC, same
-    * algorithm class, delta-frontier execution:
+    * the coloring algorithm of GraphX's `StronglyConnectedComponents`,
+    * with delta-frontier execution:
     *
     *  1. **Trim** (≤ `trimRounds`): nodes missing an in- or out-edge in
     *     the active subgraph are singleton SCCs — label self, drop, and
@@ -353,14 +241,14 @@ object Algorithms {
     *
     * Progress per outer round is guaranteed (the globally minimal active
     * node is always a confirmed root); the outer count is bounded by the
-    * condensation depth, as with GraphX's loop. Why not single-pivot
+    * condensation depth. Why not single-pivot
     * forward-backward divide-and-conquer: with P live partitions it
     * finalizes ≤ P pivot SCCs per round, so a many-small-SCC graph
     * (the planted soak: 31,250 SCCs, depth-1 condensation) serializes
     * into thousands of rounds, where coloring finalizes EVERY root's SCC
     * simultaneously — 2 outer rounds on that topology. Coloring's known
     * weakness (chain-of-SCCs condensations re-color per level) is capped
-    * by `maxOuter`, same backstop semantics as the GraphX bridge.
+    * by `maxOuter`, which fails loud rather than return interim colors.
     *
     * Scale shape per step: frontier shuffles onto the persisted edge
     * layout (hash on src for forward, dst for backward — edges are laid
@@ -371,8 +259,10 @@ object Algorithms {
     * edges naming ids absent from `nodes` are dropped up front (a ghost
     * endpoint must neither appear in the output nor label a real SCC —
     * the hits contract, r15 ADVICE). Output: (node, comp), comp = the
-    * SCC's minimum member — identical labels to GraphX coloring and
-    * Tarjan. */
+    * SCC's minimum member — identical labels to the Tarjan twin.
+    *
+    * Measured: the one distributed SCC loop (10M-edge planted soak,
+    * GRAPH_SCALE.json: 48-51 s here vs 577-777 s for GraphX coloring). */
   def scc(nodes: DataFrame, edges: DataFrame, maxOuter: Int = 64,
           trimRounds: Int = 2, numParts: Int = 0): DataFrame = {
     val spark = nodes.sparkSession
@@ -1810,9 +1700,10 @@ object Algorithms {
     *
     * Distributed formulation (bounded graphs route to
     * [[LocalExec.bridges]], the exact Tarjan low-link twin):
-    *   1. label components ([[connectedComponents]] — comp = min member
-    *      id), then grow a BFS spanning forest from each component's
-    *      root, parent = min frontier neighbor (deterministic);
+    *   1. label components ([[GraphXBridge.connectedComponents]] —
+    *      comp = min member id), then grow a BFS spanning forest from
+    *      each component's root, parent = min frontier neighbor
+    *      (deterministic);
     *   2. every non-tree edge gets two independent 64-bit signatures
     *      (xxhash64 of its canonical pair under two salts); each node
     *      XOR-folds its incident non-tree signatures (`bit_xor`, one
@@ -1911,7 +1802,7 @@ object Algorithms {
   /** Deterministic BFS spanning forest over the canonical undirected
     * graph — the shared substrate of [[bridges]] and
     * [[articulationPoints]]: each component grows from its minimum id
-    * (the [[connectedComponents]] label), parent = min frontier
+    * (the [[GraphXBridge.connectedComponents]] label), parent = min frontier
     * neighbor. Returns (node, parent NULL at roots, depth). `maxRounds`
     * caps the BFS depth and FAILS LOUD if the forest is not complete —
     * both consumers would silently misclassify on a truncated forest
@@ -1921,8 +1812,9 @@ object Algorithms {
   private[graft] def spanningForest(nodes: DataFrame, canon: DataFrame,
                                     und: DataFrame, maxRounds: Int,
                                     numParts: Int, who: String): DataFrame = {
-    val comp = connectedComponents(nodes,
-      canon.select(col("a").as("src"), col("b").as("dst")), numParts)
+    val comp = GraphXBridge.connectedComponents(nodes.sparkSession,
+      PropertyGraph(nodes, canon.select(col("a").as("src"), col("b").as("dst"))),
+      numParts)
     var visited = comp.filter(col("node") === col("comp"))
       .select(col("node"), lit(null).cast("long").as("parent"),
         lit(0).as("depth"))
@@ -1978,8 +1870,8 @@ object Algorithms {
     *      escapes subtree(u) (low(v) < pre(u) ∨ high(v) ≥
     *      pre(u) + nd(u)) — each fundamental cycle's tree path is thus
     *      chained link-by-link, ancestor-type non-tree edges included,
-    *      so [[connectedComponents]] over these links labels every tree
-    *      edge with its biconnected component;
+    *      so [[GraphXBridge.connectedComponents]] over these links
+    *      labels every tree edge with its biconnected component;
     *   3. a vertex is an articulation point iff its incident TREE edges
     *      span ≥ 2 block labels (every block containing v contains a
     *      tree edge at v — any spanning tree of G induces a spanning
@@ -2221,8 +2113,8 @@ object Algorithms {
       .select(col("parent").as("src"), col("node").as("dst"))
     val auxNodes = lh.filter(col("parent").isNotNull)
       .select(col("node").as("id"))
-    val blockCC = connectedComponents(auxNodes, auxA.unionByName(auxB),
-      numParts).localCheckpoint()
+    val blockCC = GraphXBridge.connectedComponents(edges.sparkSession,
+      PropertyGraph(auxNodes, auxA.unionByName(auxB)), numParts).localCheckpoint()
     (canon, lh, blockCC)
   }
 

@@ -28,9 +28,9 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructFiel
   * budget is conservative — `spark.sql.autoBroadcastJoinThreshold`-sized,
   * i.e. "small enough that the engine would happily ship it to every
   * executor anyway"; collecting it once to the driver is strictly less
-  * movement than one broadcast. GraphSpec pins local ≡ distributed on the
-  * real power-law graph and on the generated grids, with the knob forced
-  * off to exercise the distributed twin.
+  * movement than one broadcast. GraphSpec and RouteEquivalenceSpec pin
+  * local ≡ distributed on power-law graphs and on the generated grids,
+  * with the knob forced off to exercise the distributed twin.
   */
 object LocalExec {
 
@@ -264,34 +264,76 @@ object LocalExec {
     adj
   }
 
+  /** Collected graph on dense indices: the node ids and, per index, its
+    * distinct out-neighbour indices. Edges naming ids outside `nodes`,
+    * self-loops and duplicate edges are dropped — none of them changes a
+    * BFS distance or a shortest-path count. */
+  private def indexedAdjacency(nodes: DataFrame,
+                               edges: DataFrame): (Array[Long], Array[Array[Int]]) = {
+    val (src, dst) = collectEdges(edges)
+    val ids = collectLongs(nodes)
+    val idx = ids.zipWithIndex.toMap
+    val n = ids.length
+    val dedup = new java.util.HashSet[Long]()
+    val adjH = Array.fill(n)(List.empty[Int])
+    var i = 0
+    while (i < src.length) {
+      (idx.get(src(i)), idx.get(dst(i))) match {
+        case (Some(si), Some(di)) if si != di =>
+          if (dedup.add(si.toLong * n + di)) adjH(si) = di :: adjH(si)
+        case _ => ()
+      }
+      i += 1
+    }
+    (ids, adjH.map(_.toArray))
+  }
+
   // --- traversals -----------------------------------------------------------
 
-  /** Local twin of [[Traversals.kHop]]: nodes first reached at hop 1..k,
-    * with their BFS distance; the source itself excluded (it is visited at
-    * hop 0, so a cycle back never re-admits it — same rule as the
-    * distributed frontier's anti-join against the visited set). Schema
-    * matches the distributed output exactly: (node: long, dist: int). */
-  def kHop(edges: DataFrame, source: Long, maxHops: Int): DataFrame = {
-    val spark = edges.sparkSession
+  /** The one single-source BFS behind [[kHop]], [[distances]] and
+    * [[shortestPathLength]]: expands `source` level by level for at most
+    * `maxHops` levels, calling `reached(v, hop)` once per newly reached
+    * node in BFS order. The source is visited at hop 0 and never
+    * reported, so a cycle back never re-admits it — the same rule as the
+    * distributed frontier's anti-join against the visited set.
+    * `reached` returning false ends the walk at once. */
+  private def bfs(edges: DataFrame, source: Long, maxHops: Int)
+                 (reached: (Long, Int) => Boolean): Unit = {
     val (s, d) = collectEdges(edges)
     val adj = adjacency(s, d)
     val seen = mutable.LongMap.empty[Unit]
     seen(source) = ()
-    val out = mutable.ArrayBuffer.empty[(Long, Int)]
-    var frontier: Seq[Long] = Seq(source)
+    var frontier = mutable.ArrayBuffer(source)
     var hop = 1
-    while (frontier.nonEmpty && hop <= maxHops) {
+    var go = true
+    while (go && frontier.nonEmpty && hop <= maxHops) {
       val next = mutable.ArrayBuffer.empty[Long]
-      frontier.foreach { u =>
-        adj.get(u).foreach(_.foreach { v =>
-          if (!seen.contains(v)) { seen(v) = (); next += v; out += ((v, hop)) }
-        })
+      var i = 0
+      while (go && i < frontier.length) {
+        adj.get(frontier(i)) match {
+          case Some(ns) =>
+            var j = 0
+            while (go && j < ns.length) {
+              val v = ns(j)
+              if (!seen.contains(v)) { seen(v) = (); next += v; go = reached(v, hop) }
+              j += 1
+            }
+          case None => ()
+        }
+        i += 1
       }
-      frontier = next.toSeq
+      frontier = next
       hop += 1
     }
-    localDF(spark, schema2("node", LongType, "dist", IntegerType),
-      out.toSeq.map { case (n, h) => Row(n, h) })
+  }
+
+  /** Local twin of [[Traversals.kHop]]: nodes first reached at hop 1..k,
+    * with their BFS distance; the source itself excluded. Schema matches
+    * the distributed output exactly: (node: long, dist: int). */
+  def kHop(edges: DataFrame, source: Long, maxHops: Int): DataFrame = {
+    val out = mutable.ArrayBuffer.empty[Row]
+    bfs(edges, source, maxHops) { (v, hop) => out += Row(v, hop); true }
+    localDF(edges.sparkSession, schema2("node", LongType, "dist", IntegerType), out.toSeq)
   }
 
   /** Local twin of [[GraphXBridge.distances]]: BFS distances from `source`
@@ -300,28 +342,13 @@ object LocalExec {
     * source outside the universe yields the same empty result the Pregel
     * run produces. Schema: (node: long, dist: long). */
   def distances(nodes: DataFrame, edges: DataFrame, source: Long): DataFrame = {
-    val spark = edges.sparkSession
     val distSchema = schema2("node", LongType, "dist", LongType)
     val (s, d) = collectEdges(edges)
-    val nodeIds = collectLongs(nodes)
-    if (!nodeIds.contains(source) && !s.contains(source) && !d.contains(source))
-      return localDF(spark, distSchema, Nil)
-    val adj = adjacency(s, d)
-    val dist = mutable.LongMap.empty[Long]
-    dist(source) = 0L
-    var frontier: Seq[Long] = Seq(source)
-    var hop = 1L
-    while (frontier.nonEmpty) {
-      val next = mutable.ArrayBuffer.empty[Long]
-      frontier.foreach { u =>
-        adj.get(u).foreach(_.foreach { v =>
-          if (!dist.contains(v)) { dist(v) = hop; next += v }
-        })
-      }
-      frontier = next.toSeq
-      hop += 1
-    }
-    localDF(spark, distSchema, dist.toSeq.map { case (n, dd) => Row(n, dd) })
+    if (!collectLongs(nodes).contains(source) && !s.contains(source) && !d.contains(source))
+      return localDF(edges.sparkSession, distSchema, Nil)
+    val out = mutable.ArrayBuffer(Row(source, 0L))
+    bfs(edges, source, Int.MaxValue) { (v, hop) => out += Row(v, hop.toLong); true }
+    localDF(edges.sparkSession, distSchema, out.toSeq)
   }
 
   /** Local twin of [[GraphXBridge.weightedDistances]]: Dijkstra over
@@ -546,37 +573,26 @@ object LocalExec {
       ids.indices.map(j => Row(ids(j), core(j).toLong)))
   }
 
-  /** Local twin of [[Algorithms.closeness]] — per-source BFS over the
-    * collected adjacency, identical (reach, dist_sum) integer pairs
-    * (distances are exact ints in both formulations, so twin ≡
-    * distributed ≡ oracle needs no tolerance). Distances beyond
-    * `maxRounds` are not counted, matching the distributed round cap. */
-  def closeness(nodes: DataFrame, edges: DataFrame,
-                maxRounds: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val (src, dst) = collectEdges(edges)
-    val ids = collectLongs(nodes)
-    val idx = ids.zipWithIndex.toMap
-    val adjH = Array.fill(ids.length)(List.empty[Int])
-    var i = 0
-    while (i < src.length) {
-      (idx.get(src(i)), idx.get(dst(i))) match {
-        case (Some(si), Some(di)) => adjH(si) = di :: adjH(si)
-        case _ => ()
-      }
-      i += 1
-    }
-    val adj = adjH.map(_.toArray)
+  /** The one per-source BFS kernel behind [[closeness]],
+    * [[eccentricity]] and [[harmonic]]: a BFS from every node over the
+    * indexed adjacency, bounded at `maxRounds` levels (distances beyond it
+    * are not counted, matching the distributed round cap). Each reached
+    * node's distance is folded into its source's accumulators
+    * (`fold(acc, d)`, `acc` zeroed per source). Distances are exact ints
+    * in both formulations, so twin ≡ distributed ≡ oracle needs no
+    * tolerance. Schema: (node: long, cols: long...). */
+  private def perSourceBfs(nodes: DataFrame, edges: DataFrame, maxRounds: Int,
+                           cols: String*)(fold: (Array[Long], Int) => Unit): DataFrame = {
+    val (ids, adj) = indexedAdjacency(nodes, edges)
     val dist = new Array[Int](ids.length)
     val queue = new Array[Int](ids.length)
     val rows = ids.indices.map { s =>
+      val acc = new Array[Long](cols.length)
       java.util.Arrays.fill(dist, -1)
       dist(s) = 0
       queue(0) = s
       var head = 0
       var tail = 1
-      var reach = 0L
-      var sum = 0L
       while (head < tail) {
         val u = queue(head); head += 1
         if (dist(u) < maxRounds) {
@@ -586,129 +602,41 @@ object LocalExec {
             val w = ns(j)
             if (dist(w) < 0) {
               dist(w) = dist(u) + 1
-              reach += 1L
-              sum += dist(w).toLong
+              fold(acc, dist(w))
               queue(tail) = w; tail += 1
             }
             j += 1
           }
         }
       }
-      Row(ids(s), reach, sum)
+      Row.fromSeq(ids(s) +: acc.toSeq)
     }
-    localDF(spark, StructType(Seq(
-      StructField("node", LongType, nullable = false),
-      StructField("reach", LongType, nullable = false),
-      StructField("dist_sum", LongType, nullable = false))), rows)
+    localDF(edges.sparkSession, StructType(("node" +: cols).map(c =>
+      StructField(c, LongType, nullable = false))), rows)
   }
 
-  /** Local twin of [[Algorithms.eccentricity]]: the closeness twin's
-    * per-source BFS publishing (max distance, reach) — integers on both
-    * formulations, so twin ≡ distributed ≡ oracle is exact equality.
-    * Schema: (node: long, ecc: long, reach: long). */
-  def eccentricity(nodes: DataFrame, edges: DataFrame,
-                   maxRounds: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val (src, dst) = collectEdges(edges)
-    val ids = collectLongs(nodes)
-    val idx = ids.zipWithIndex.toMap
-    val adjH = Array.fill(ids.length)(List.empty[Int])
-    var i = 0
-    while (i < src.length) {
-      (idx.get(src(i)), idx.get(dst(i))) match {
-        case (Some(si), Some(di)) => adjH(si) = di :: adjH(si)
-        case _ => ()
-      }
-      i += 1
+  /** Local twin of [[Algorithms.closeness]]: per source the integer pair
+    * (reach, dist_sum). */
+  def closeness(nodes: DataFrame, edges: DataFrame, maxRounds: Int): DataFrame =
+    perSourceBfs(nodes, edges, maxRounds, "reach", "dist_sum") { (acc, d) =>
+      acc(0) += 1L; acc(1) += d
     }
-    val adj = adjH.map(_.toArray)
-    val dist = new Array[Int](ids.length)
-    val queue = new Array[Int](ids.length)
-    val rows = ids.indices.map { s =>
-      java.util.Arrays.fill(dist, -1)
-      dist(s) = 0
-      queue(0) = s
-      var head = 0
-      var tail = 1
-      var ecc = 0L
-      var reach = 0L
-      while (head < tail) {
-        val u = queue(head); head += 1
-        if (dist(u) < maxRounds) {
-          val ns = adj(u)
-          var j = 0
-          while (j < ns.length) {
-            val w = ns(j)
-            if (dist(w) < 0) {
-              dist(w) = dist(u) + 1
-              reach += 1L
-              if (dist(w) > ecc) ecc = dist(w).toLong
-              queue(tail) = w; tail += 1
-            }
-            j += 1
-          }
-        }
-      }
-      Row(ids(s), ecc, reach)
-    }
-    localDF(spark, StructType(Seq(
-      StructField("node", LongType, nullable = false),
-      StructField("ecc", LongType, nullable = false),
-      StructField("reach", LongType, nullable = false))), rows)
-  }
 
-  /** Local twin of [[Algorithms.harmonic]]: the same per-source BFS as
-    * [[closeness]], accumulating `HarmonicFp DIV d` per reached node —
-    * the exact fixed-point convention of the distributed operator.
-    * Schema: (node: long, harmonic_fp: long). */
-  def harmonic(nodes: DataFrame, edges: DataFrame,
-               maxRounds: Int): DataFrame = {
-    val spark = edges.sparkSession
-    val (src, dst) = collectEdges(edges)
-    val ids = collectLongs(nodes)
-    val idx = ids.zipWithIndex.toMap
-    val adjH = Array.fill(ids.length)(List.empty[Int])
-    var i = 0
-    while (i < src.length) {
-      (idx.get(src(i)), idx.get(dst(i))) match {
-        case (Some(si), Some(di)) => adjH(si) = di :: adjH(si)
-        case _ => ()
-      }
-      i += 1
+  /** Local twin of [[Algorithms.eccentricity]]: per source (max distance,
+    * reach). */
+  def eccentricity(nodes: DataFrame, edges: DataFrame, maxRounds: Int): DataFrame =
+    perSourceBfs(nodes, edges, maxRounds, "ecc", "reach") { (acc, d) =>
+      if (d > acc(0)) acc(0) = d
+      acc(1) += 1L
     }
-    val adj = adjH.map(_.toArray)
-    val dist = new Array[Int](ids.length)
-    val queue = new Array[Int](ids.length)
-    val fp = Algorithms.HarmonicFp
-    val rows = ids.indices.map { s =>
-      java.util.Arrays.fill(dist, -1)
-      dist(s) = 0
-      queue(0) = s
-      var head = 0
-      var tail = 1
-      var hsum = 0L
-      while (head < tail) {
-        val u = queue(head); head += 1
-        if (dist(u) < maxRounds) {
-          val ns = adj(u)
-          var j = 0
-          while (j < ns.length) {
-            val w = ns(j)
-            if (dist(w) < 0) {
-              dist(w) = dist(u) + 1
-              hsum += fp / dist(w)
-              queue(tail) = w; tail += 1
-            }
-            j += 1
-          }
-        }
-      }
-      Row(ids(s), hsum)
+
+  /** Local twin of [[Algorithms.harmonic]]: per source Σ `HarmonicFp DIV d`
+    * over reached nodes — the distributed operator's exact fixed-point
+    * convention. */
+  def harmonic(nodes: DataFrame, edges: DataFrame, maxRounds: Int): DataFrame =
+    perSourceBfs(nodes, edges, maxRounds, "harmonic_fp") { (acc, d) =>
+      acc(0) += Algorithms.HarmonicFp / d
     }
-    localDF(spark, StructType(Seq(
-      StructField("node", LongType, nullable = false),
-      StructField("harmonic_fp", LongType, nullable = false))), rows)
-  }
 
   /** Local twin of [[Algorithms.stress]]: textbook single-source Brandes
     * per source over adjacency arrays — forward BFS with integer path
@@ -738,22 +666,8 @@ object LocalExec {
 
   def stress(nodes: DataFrame, edges: DataFrame, maxRounds: Int): DataFrame = {
     val spark = edges.sparkSession
-    val (src, dst) = collectEdges(edges)
-    val ids = collectLongs(nodes)
-    val idx = ids.zipWithIndex.toMap
+    val (ids, adj) = indexedAdjacency(nodes, edges)
     val n = ids.length
-    val dedup = new java.util.HashSet[Long]()
-    val adjH = Array.fill(n)(List.empty[Int])
-    var i = 0
-    while (i < src.length) {
-      (idx.get(src(i)), idx.get(dst(i))) match {
-        case (Some(si), Some(di)) if si != di =>
-          if (dedup.add(si.toLong * n + di)) adjH(si) = di :: adjH(si)
-        case _ => ()
-      }
-      i += 1
-    }
-    val adj = adjH.map(_.toArray)
     val stressAcc = new Array[Long](n)
     val dist = new Array[Int](n)
     val sigma = new Array[Long](n)
@@ -822,22 +736,8 @@ object LocalExec {
   def betweenness(nodes: DataFrame, edges: DataFrame, maxRounds: Int,
                   fp: Long): DataFrame = {
     val spark = edges.sparkSession
-    val (src, dst) = collectEdges(edges)
-    val ids = collectLongs(nodes)
-    val idx = ids.zipWithIndex.toMap
+    val (ids, adj) = indexedAdjacency(nodes, edges)
     val n = ids.length
-    val dedup = new java.util.HashSet[Long]()
-    val adjH = Array.fill(n)(List.empty[Int])
-    var i = 0
-    while (i < src.length) {
-      (idx.get(src(i)), idx.get(dst(i))) match {
-        case (Some(si), Some(di)) if si != di =>
-          if (dedup.add(si.toLong * n + di)) adjH(si) = di :: adjH(si)
-        case _ => ()
-      }
-      i += 1
-    }
-    val adj = adjH.map(_.toArray)
     val bcAcc = new Array[Long](n)
     val dist = new Array[Int](n)
     val sigma = new Array[Long](n)
@@ -896,10 +796,9 @@ object LocalExec {
       StructField("bc_fp", LongType, nullable = false))), rows)
   }
 
-  /** Local twin of the connected-components operators (undirected min-id
-    * labels — the fixpoint of both GraphX's CC and the large/small-star
-    * DataFrame loop): union-find with path compression, roots kept at the
-    * component's min id. Universe = nodes ∪ edge endpoints; isolated
+  /** Local twin of [[GraphXBridge.connectedComponents]] (undirected
+    * min-id labels, GraphX CC's fixpoint): union-find with path
+    * compression, roots kept at the component's min id. Universe = nodes ∪ edge endpoints; isolated
     * nodes label themselves. Collects through [[collectBounded]], so a
     * graph over `maxRows` nodes or edges returns `None` and the caller
     * runs its distributed loop. Schema: (node: long, comp: long). */
@@ -935,11 +834,12 @@ object LocalExec {
     }
   }
 
-  /** Local twin of the DIRECTED strongly-connected-components operator:
-    * iterative Tarjan (explicit frame stack — no JVM recursion limit on
-    * long path graphs), each SCC labeled with its MINIMUM member id —
-    * the same canonical labeling GraphX's StronglyConnectedComponents
-    * converges to, so the two are directly parity-comparable. Universe =
+  /** Local twin of [[Algorithms.scc]], the DIRECTED strongly connected
+    * components: iterative Tarjan (explicit frame stack — no JVM
+    * recursion limit on long path graphs), each SCC labeled with its
+    * MINIMUM member id — the same canonical labeling the distributed
+    * coloring loop converges to, so the two are directly
+    * parity-comparable. Universe =
     * `nodes`; edges naming ids absent from the node list are DROPPED —
     * a ghost endpoint must neither appear in the output nor (as a
     * smaller id closing a cycle) label a real node's SCC, the same
@@ -1655,25 +1555,11 @@ object LocalExec {
     * source == target (the distributed loop's own pre-check). */
   def shortestPathLength(edges: DataFrame, source: Long, target: Long): Long = {
     if (source == target) return 0L
-    val (s, d) = collectEdges(edges)
-    val adj = adjacency(s, d)
-    val seen = mutable.LongMap.empty[Unit]
-    seen(source) = ()
-    var frontier: Seq[Long] = Seq(source)
-    var hop = 1L
-    while (frontier.nonEmpty) {
-      val next = mutable.ArrayBuffer.empty[Long]
-      var hit = false
-      frontier.foreach { u =>
-        adj.get(u).foreach(_.foreach { v =>
-          if (v == target) hit = true
-          else if (!seen.contains(v)) { seen(v) = (); next += v }
-        })
-      }
-      if (hit) return hop
-      frontier = next.toSeq
-      hop += 1L
+    var found = -1L
+    bfs(edges, source, Int.MaxValue) { (v, hop) =>
+      if (v == target) found = hop
+      found < 0L
     }
-    -1L
+    found
   }
 }

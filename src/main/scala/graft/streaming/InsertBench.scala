@@ -112,8 +112,8 @@ object InsertBench {
         // Per-op OLTP path: every micro-batch REBUILDS its physical plan
         // (IncrementalExecution), so whole-stage codegen re-GENERATES its
         // source per batch and only the janino compile is cached — for a
-        // 1-row batch that generation is pure floor (InsertProbe measured
-        // addBatch 39→~25 ms/op with codegen off, identical rows).
+        // 1-row batch that generation is pure floor (measured: addBatch
+        // 39→~25 ms/op with codegen off, identical rows).
         // Interpreted expression eval of one row costs microseconds; the
         // batch pipeline keeps codegen, where it amortizes over millions
         // of rows. Scoped to this query via the session-conf clone.

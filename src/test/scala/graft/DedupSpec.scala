@@ -311,6 +311,15 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(clusters == expected)
   }
 
+  test("dedupClusters: the GraphX fallback (LocalExec off) gives the union-find clusters") {
+    def clusters(): Map[Long, Long] = Dedup.dedupClusters(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    val local = clusters()
+    val distributed = LocalExecOff(spark)(clusters())
+    assert(local.nonEmpty)
+    assert(distributed == local)
+  }
+
   test("incrementalDedup: cross-source matches are exactly the minhash pairs spanning the batch boundary") {
     import org.apache.spark.sql.functions.col
     val srcOf = graft.sources.Tables.documents(spark, dir)

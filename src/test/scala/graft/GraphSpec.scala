@@ -7,8 +7,8 @@ import org.scalatest.BeforeAndAfterAll
 import graft.graph.{Algorithms, GraphXBridge, PropertyGraph, Traversals}
 
 /** Unit semantics on tiny hand-built graphs with known answers, plus
-  * DataFrame-vs-GraphX agreement (two independent implementations must
-  * produce identical results). */
+  * driver-local-vs-distributed agreement (each operator's LocalExec twin
+  * and its distributed loop must produce identical results). */
 class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -36,18 +36,9 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     * [[graft.graph.LocalExec]]'s byte budget, so tests that exist to pin
     * the Pregel / Bellman-Ford / frontier-BFS implementations must switch
     * the local fast path off for their scope. */
-  private def withLocalExecOff[A](body: => A): A = {
-    val key = graft.graph.LocalExec.MaxBytesKey
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "0")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withLocalExecOff[A](body: => A): A = LocalExecOff(spark)(body)
 
-  test("SCC: planted cycles resolve exactly, local Tarjan ≡ GraphX coloring") {
+  test("SCC: planted cycles resolve exactly, local Tarjan ≡ DataFrame coloring") {
     // two 3-cycles bridged one-way (stay separate SCCs), a 2-cycle, a
     // directed path (all singletons), and an isolated node
     val g = graph(Seq(
@@ -65,17 +56,17 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
       20L -> 20L, 21L -> 20L, 30L -> 30L, 31L -> 31L, 32L -> 32L, 40L -> 40L)
     def labels(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val local = labels(GraphXBridge.stronglyConnectedComponents(spark, withIso))
+    val local = labels(Algorithms.scc(withIso.nodes, withIso.edges))
     assert(local == expected, s"local: $local")
     val dist = withLocalExecOff {
-      labels(GraphXBridge.stronglyConnectedComponents(spark, withIso, numParts = 2))
+      labels(Algorithms.scc(withIso.nodes, withIso.edges, numParts = 2))
     }
     assert(dist == expected, s"distributed: $dist")
   }
 
   test("SCC on Wiki-Vote: directed structure differs from CC, giant SCC labeled by min member") {
     val g = graft.operators.GraphOps.wikiVote(spark)
-    val scc = GraphXBridge.stronglyConnectedComponents(spark, g)
+    val scc = Algorithms.scc(g.nodes, g.edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val sizes = scc.groupBy(_._2).map { case (c, m) => c -> m.size }
     val (giantLabel, giantSize) = sizes.maxBy(_._2)
@@ -153,14 +144,16 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("distances agree with GraphX Pregel on the grid") {
-    withLocalExecOff {
-      val g = PropertyGraph.grid(spark, 8)
-      val df = Traversals.distances(g.edges, 0L)
-        .collect().map(r => (r.getLong(0), r.getInt(1).toLong)).toSet
-      val gx = GraphXBridge.distances(spark, g, 0L)
+    val g = PropertyGraph.grid(spark, 8)
+    val local = GraphXBridge.distances(spark, g, 0L)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val gx = withLocalExecOff {
+      GraphXBridge.distances(spark, g, 0L)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(df == gx)
     }
+    assert(local == gx)
+    // right/down grid: cell (r, c) = r·8 + c sits r + c hops from the corner
+    assert(gx == (0L until 64L).map(id => (id, id / 8 + id % 8)).toSet)
   }
 
   test("LocalExec: local traversals equal the distributed twins (grid + Wiki-Vote)") {
@@ -265,10 +258,10 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // bounded-probe contract: a localBounded assertion SMALLER than the
     // graph must fall back to the distributed loop, same answer
-    val viaLocal = Algorithms.connectedComponents(pathG.nodes, pathG.edges,
+    val viaLocal = GraphXBridge.connectedComponents(spark, pathG,
         localBounded = 1 << 20)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val viaFallback = Algorithms.connectedComponents(pathG.nodes, pathG.edges,
+    val viaFallback = GraphXBridge.connectedComponents(spark, pathG,
         localBounded = 2) // pathG has 4 edges — probe overflows
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(viaLocal == viaFallback && viaLocal.values.forall(_ == 1L))
@@ -309,26 +302,48 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("connectedComponents: min-id labeling, two components; agrees with GraphX") {
     val g = graph(Seq((1L, 2L), (2L, 3L), (10L, 11L)))
-    val df = Algorithms.connectedComponents(g.nodes, g.edges)
+    val local = GraphXBridge.connectedComponents(spark, g)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(df == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    assert(local == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
     val gx = withLocalExecOff {
       GraphXBridge.connectedComponents(spark, g)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     }
-    assert(df == gx)
+    assert(local == gx)
+  }
+
+  test("connectedComponents labels nodes ∪ edge endpoints on both routes") {
+    import spark.implicits._
+    // 4 is named only by an edge; 5 and 6 only by an edge between them
+    val nodes = Seq(1L, 2L, 3L).toDF("id")
+    val edges = Seq((1L, 2L), (3L, 4L), (5L, 6L)).toDF("src", "dst")
+    val g = PropertyGraph(nodes, edges)
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L, 5L -> 5L, 6L -> 5L)
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(labels(GraphXBridge.connectedComponents(spark, g)) === expected, "union-find twin")
+    // a bound below the 3 edges overflows the probe: GraphX answers
+    assert(labels(GraphXBridge.connectedComponents(spark, g, localBounded = 2)) ===
+      expected, "bounded-probe fallback")
+    withLocalExecOff {
+      assert(labels(GraphXBridge.connectedComponents(spark, g, numParts = 2)) === expected,
+        "GraphX loop")
+    }
   }
 
   test("pageRank: ranks sum to ~1 on a strongly-connected clique; agrees with GraphX") {
     val g = graph(Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (1L, 3L), (3L, 1L)))
-    val df = Algorithms.pageRank(g.nodes, g.edges, iters = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    assert(math.abs(df.values.sum - 1.0) < 1e-9)
-    // symmetric clique → uniform ranks
-    assert(df.values.forall(v => math.abs(v - 1.0 / 3) < 1e-9))
+    // raw doubles always run the GraphX loop
     val gx = GraphXBridge.pageRank(spark, g, iters = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    df.foreach { case (k, v) => assert(math.abs(v - gx(k)) < 1e-12) }
+    assert(gx.size == 3)
+    assert(math.abs(gx.values.sum - 1.0) < 1e-9)
+    // symmetric clique → uniform ranks, the closed form 1/3 per node
+    assert(gx.values.forall(v => math.abs(v - 1.0 / 3) < 1e-9))
+    // the snapped local twin lands on the same closed form
+    val local = GraphXBridge.pageRank(spark, g, iters = 10, snap = 9)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+    gx.foreach { case (k, v) => assert(math.abs(v - local(k)) < 1e-9) }
   }
 
   test("hits: matches an independent exact-integer recompute; direction structure shows") {
@@ -488,7 +503,7 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(distGhost === expected)
   }
 
-  test("scc: DataFrame trim+coloring ≡ GraphX coloring ≡ local Tarjan on a depth-3 condensation") {
+  test("scc: DataFrame trim+coloring ≡ local Tarjan on a depth-3 condensation") {
     // three 3-cycles chained 1→4→10 (condensation depth 3 — the coloring
     // loop needs one outer round per level), plus a trimmable out-only
     // tail (20→1) and in-only tail (3→21): singleton SCCs the trim stage
@@ -509,8 +524,8 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     withLocalExecOff {
       assert(rows(Algorithms.scc(g.nodes, g.edges, numParts = 4)) === expected,
         "distributed DataFrame coloring loop")
-      assert(rows(GraphXBridge.stronglyConnectedComponents(spark, g, numParts = 4)) === expected,
-        "GraphX coloring twin")
+      assert(rows(Algorithms.scc(g.nodes, g.edges)) === expected,
+        "distributed DataFrame coloring loop at session partitioning")
       // trim alone must finish an acyclic graph (every node a singleton)
       val dag = graph(Seq((1L, 2L), (2L, 3L), (1L, 3L)))
       assert(rows(Algorithms.scc(dag.nodes, dag.edges, numParts = 4)) ===
@@ -1095,12 +1110,13 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("BFS on a 300-hop path graph: visited-set compaction keeps deep traversals viable") {
-    val n = 300
+    // the DataFrame BFS compacts its visited parts every 8 rounds; 300
+    // rounds of uncompacted unions would bury the loop in planning
+    val n = 300L
     val longPath = graph((0L until n).map(i => (i, i + 1)))
-    val d = Traversals.distances(longPath.edges, 0L)
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toMap
-    assert(d.size == n + 1)
-    assert((0 to n).forall(i => d(i.toLong) == i))
+    assert(Traversals.shortestPathLength(longPath.edges, 0L, n) == n)
+    assert(Traversals.shortestPathLength(longPath.edges, 0L, n / 2) == n / 2)
+    assert(Traversals.shortestPathLength(longPath.edges, n, 0L) == -1L)
   }
 
   test("commonNeighbors: triangle pairs score 1; over-cap hubs are not witnesses") {

@@ -192,8 +192,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Tarjan twin agrees with the closed form comp(v) = (v div B)·B on a
     // small instance (the soak asserts the same form at 10M edges)
     val nodes = spark.range(nNodes).select(col("id"))
-    val scc = graft.graph.GraphXBridge.stronglyConnectedComponents(
-      spark, graft.graph.PropertyGraph(nodes, e))
+    val scc = graft.graph.Algorithms.scc(nodes, e)
     val bad = scc.filter(expr(s"comp <> (node DIV $b) * $b")).count()
     assert(bad == 0, s"$bad nodes off the planted labels")
   }

@@ -47,7 +47,14 @@ object Traversals {
         .filter(col("dist") >= 1)
 
   /** Unweighted shortest-path length from src to dst (reference `ssp`);
-    * -1 if unreachable. Early-exits as soon as dst is reached.
+    * -1 if unreachable, 0 when source == target. Early-exits as soon as
+    * dst is reached.
+    *
+    * Like [[kHop]], a graph whose edge relation fits [[LocalExec]]'s
+    * byte budget takes the driver-local twin: one collect job on a cold
+    * call, zero once the warm store holds the edge pairs. Above the
+    * budget the frontier rounds below run; the local route ignores
+    * `numParts`.
     *
     * Two ssp loops stay because each wins on one kind of input and the
     * search cannot know the path depth before it starts: this one took
@@ -55,11 +62,18 @@ object Traversals {
     * of a 1,036,890-edge power-law graph (4 cores), and lost 13-14 s vs
     * 5.4-5.8 s on a planted 40-hop chain. */
   def shortestPathLength(edges: DataFrame, source: Long, target: Long,
-                         numParts: Int = 0): Long = {
-    val dists = bfs(edges, source, None, stopAt = Some(target), numParts = numParts)
-    val hit = dists.filter(col("node") === target).select(col("dist")).collect()
-    if (hit.isEmpty) -1L else hit.head.getInt(0).toLong
-  }
+                         numParts: Int = 0): Long =
+    // the BFS marks the source visited at hop 0, so its per-round hit
+    // probe can never see it: without this check the loop walks the whole
+    // reachable set before answering 0
+    if (source == target) 0L
+    else if (LocalExec.smallEnoughEdges(edges))
+      LocalExec.shortestPathLength(edges, source, target)
+    else {
+      val dists = bfs(edges, source, None, stopAt = Some(target), numParts = numParts)
+      val hit = dists.filter(col("node") === target).select(col("dist")).collect()
+      if (hit.isEmpty) -1L else hit.head.getInt(0).toLong
+    }
 
   /** `numParts > 0` sizes the persisted edge partitioning to the graph
     * instead of `spark.sql.shuffle.partitions` — a 760-edge grid over 32

@@ -128,8 +128,24 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("shortestPathLength: path length and unreachable") {
-    assert(Traversals.shortestPathLength(pathG.edges, 1L, 4L) == 3L)
-    assert(Traversals.shortestPathLength(pathG.edges, 4L, 1L) == -1L)
+    // the default route takes the local twin on this graph; the frontier
+    // loop must give the same answers
+    def check(): Unit = {
+      assert(Traversals.shortestPathLength(pathG.edges, 1L, 4L) == 3L)
+      assert(Traversals.shortestPathLength(pathG.edges, 4L, 1L) == -1L)
+      assert(Traversals.shortestPathLength(pathG.edges, 2L, 2L) == 0L)
+    }
+    check()
+    withLocalExecOff {
+      check()
+      // source == target answers at once: node 1 has out-edges, so a
+      // loop that ran would schedule a job per round
+      var len = -1L
+      val jobs = JobCount(spark) {
+        len = Traversals.shortestPathLength(pathG.edges, 1L, 1L)
+      }
+      assert(len == 0L && jobs == 0, s"source == target: $len after $jobs jobs")
+    }
   }
 
   test("GraphX early-exit ssp agrees with the DataFrame BFS") {
@@ -1111,12 +1127,15 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("BFS on a 300-hop path graph: visited-set compaction keeps deep traversals viable") {
     // the DataFrame BFS compacts its visited parts every 8 rounds; 300
-    // rounds of uncompacted unions would bury the loop in planning
+    // rounds of uncompacted unions would bury the loop in planning. The
+    // local twin would take a graph this small, so the loop is forced.
     val n = 300L
     val longPath = graph((0L until n).map(i => (i, i + 1)))
-    assert(Traversals.shortestPathLength(longPath.edges, 0L, n) == n)
-    assert(Traversals.shortestPathLength(longPath.edges, 0L, n / 2) == n / 2)
-    assert(Traversals.shortestPathLength(longPath.edges, n, 0L) == -1L)
+    withLocalExecOff {
+      assert(Traversals.shortestPathLength(longPath.edges, 0L, n) == n)
+      assert(Traversals.shortestPathLength(longPath.edges, 0L, n / 2) == n / 2)
+      assert(Traversals.shortestPathLength(longPath.edges, n, 0L) == -1L)
+    }
   }
 
   test("commonNeighbors: triangle pairs score 1; over-cap hubs are not witnesses") {

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,26 +27,7 @@ class LocalExecJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val dir = "/root/testdata/sf0.001"
 
-  private val jobs = new AtomicInteger
-  private lazy val counter = {
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
-
-  /** Jobs scheduled while running `body` (listener bus flushed on both
-    * sides so stragglers don't leak across measurements). */
-  private def countJobs(body: => Unit): Int = {
-    counter // ensure registered
-    org.apache.spark.graft.ListenerBarrier.waitUntilEmpty(spark.sparkContext)
-    jobs.set(0)
-    body
-    org.apache.spark.graft.ListenerBarrier.waitUntilEmpty(spark.sparkContext)
-    jobs.get()
-  }
+  private def countJobs(body: => Unit): Int = JobCount(spark)(body)
 
   test("grid SSSP / weighted SSSP / pair-ssp run a bounded handful of jobs") {
     // warm once: first-touch codegen can add compile-time, not jobs, but

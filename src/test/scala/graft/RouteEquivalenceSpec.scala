@@ -107,11 +107,13 @@ class RouteEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val lengths = Seq((3L, 4000L), (5000L, 17L), (1234L, 6543L), (6999L, 2L)).map {
       case (a, b) =>
         val local = GraphXBridge.shortestPathLength(spark, g, a, b)
+        val viaTraversals = Traversals.shortestPathLength(g.edges, a, b)
         val (frontier, bidir) = withLocalExecOff {
           (Traversals.shortestPathLength(g.edges, a, b, numParts = 4),
             GraphXBridge.shortestPathLength(spark, g, a, b, numParts = 4))
         }
-        assert(frontier == bidir && bidir == local, s"$a -> $b")
+        assert(frontier == bidir && bidir == local && local == viaTraversals,
+          s"$a -> $b")
         local
     }
     assert(lengths.exists(_ > 1L), s"no multi-hop pair among $lengths")

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,24 +24,7 @@ class WarmStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val dir = "/root/testdata/sf0.001"
 
-  private val jobs = new AtomicInteger
-  private lazy val counter = {
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
-
-  private def countJobs(body: => Unit): Int = {
-    counter
-    org.apache.spark.graft.ListenerBarrier.waitUntilEmpty(spark.sparkContext)
-    jobs.set(0)
-    body
-    org.apache.spark.graft.ListenerBarrier.waitUntilEmpty(spark.sparkContext)
-    jobs.get()
-  }
+  private def countJobs(body: => Unit): Int = JobCount(spark)(body)
 
   private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.collect().map(_.toString).toSet
@@ -62,6 +42,13 @@ class WarmStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(countJobs(graft.operators.GraphOps.ssspGrid(spark, dir).collect()) == 0)
     graft.operators.GraphOps.sspPair(spark, dir).collect()
     assert(countJobs(graft.operators.GraphOps.sspPair(spark, dir).collect()) == 0)
+    // and for the reference ssp entry point on an admitted graph
+    def gridSsp = graft.graph.Traversals.shortestPathLength(
+      graft.graph.PropertyGraph.grid(spark, 16).edges, 0L, 255L)
+    gridSsp
+    var warmLen = -1L
+    assert(countJobs { warmLen = gridSsp } == 0)
+    assert(warmLen == 30L)
   }
 
   test("repeat point lookups serve warm with zero scheduled jobs, same results") {

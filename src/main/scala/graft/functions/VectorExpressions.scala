@@ -613,13 +613,25 @@ object GraftFunctions {
       ArrayDotProduct(exprs.head, exprs(1))
     })
 
+  /** A builder's constant integral argument. A foldable non-integral
+    * constant (the string literal '15') or a NULL fails at analysis with
+    * an IllegalArgumentException naming the function, never an opaque
+    * ClassCastException or NullPointerException. */
+  private def intConstant(fn: String, what: String, e: Expression): Int = {
+    require(e.foldable, s"$fn's $what must be a constant")
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(e.dataType),
+      s"$fn's $what must be an integral constant, got ${e.dataType.catalogString}")
+    val v = e.eval(null)
+    require(v != null, s"$fn's $what must not be NULL")
+    v.asInstanceOf[Number].intValue
+  }
+
   val bottomkDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("graft_bottomk"),
     new ExpressionInfo(classOf[BottomK].getName, "graft_bottomk"),
     (exprs: Seq[Expression]) => {
       require(exprs.length == 2, s"graft_bottomk takes (expr, k), got ${exprs.length} args")
-      require(exprs(1).foldable, "graft_bottomk's k must be a constant")
-      BottomK(exprs.head, exprs(1).eval(null).asInstanceOf[Number].intValue)
+      BottomK(exprs.head, intConstant("graft_bottomk", "k", exprs(1)))
     })
 
   val argmaxDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
@@ -636,8 +648,7 @@ object GraftFunctions {
     new ExpressionInfo(classOf[MisraGries].getName, "graft_mg_candidates"),
     (exprs: Seq[Expression]) => {
       require(exprs.length == 2, s"graft_mg_candidates takes (expr, m), got ${exprs.length} args")
-      require(exprs(1).foldable, "graft_mg_candidates' capacity must be a constant")
-      MisraGries(exprs.head, exprs(1).eval(null).asInstanceOf[Number].intValue)
+      MisraGries(exprs.head, intConstant("graft_mg_candidates", "capacity", exprs(1)))
     })
 
   val md5hDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
@@ -647,19 +658,7 @@ object GraftFunctions {
       require(exprs.length == 1 || exprs.length == 2,
         s"graft_md5h takes (arr[, hexDigits]), got ${exprs.length} args")
       if (exprs.length == 1) ArrayMd5Head(exprs.head)
-      else {
-        require(exprs(1).foldable, "graft_md5h's hexDigits must be a constant")
-        // typed analysis error instead of an opaque ClassCastException on
-        // a foldable non-numeric constant like the string literal '15'
-        require(Seq(org.apache.spark.sql.types.ByteType,
-            org.apache.spark.sql.types.ShortType,
-            org.apache.spark.sql.types.IntegerType,
-            org.apache.spark.sql.types.LongType).contains(exprs(1).dataType),
-          s"graft_md5h's hexDigits must be an integral constant, got " +
-            s"${exprs(1).dataType.catalogString}")
-        ArrayMd5Head(exprs.head,
-          exprs(1).eval(null).asInstanceOf[Number].intValue)
-      }
+      else ArrayMd5Head(exprs.head, intConstant("graft_md5h", "hexDigits", exprs(1)))
     })
 
   val simhashDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
@@ -667,8 +666,7 @@ object GraftFunctions {
     new ExpressionInfo(classOf[SimhashFingerprint].getName, "graft_simhash"),
     (exprs: Seq[Expression]) => {
       require(exprs.length == 2, s"graft_simhash takes (vals, bits), got ${exprs.length} args")
-      require(exprs(1).foldable, "graft_simhash's bits must be a constant")
-      SimhashFingerprint(exprs.head, exprs(1).eval(null).asInstanceOf[Number].intValue)
+      SimhashFingerprint(exprs.head, intConstant("graft_simhash", "bits", exprs(1)))
     })
 
   val bloomAggDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
@@ -677,11 +675,9 @@ object GraftFunctions {
     (exprs: Seq[Expression]) => {
       require(exprs.length == 3,
         s"graft_bloom_agg takes (hash, numBits, numHashes), got ${exprs.length} args")
-      require(exprs(1).foldable && exprs(2).foldable,
-        "graft_bloom_agg's numBits/numHashes must be constants")
       BloomFilterAgg(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue,
-        exprs(2).eval(null).asInstanceOf[Number].intValue)
+        intConstant("graft_bloom_agg", "numBits", exprs(1)),
+        intConstant("graft_bloom_agg", "numHashes", exprs(2)))
     })
 
   val bloomContainsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
@@ -723,8 +719,7 @@ object GraftFunctions {
     new ExpressionInfo(classOf[MinhashSignature].getName, "graft_minhash"),
     (exprs: Seq[Expression]) => {
       require(exprs.length == 2, s"graft_minhash takes (hvs, k), got ${exprs.length} args")
-      require(exprs(1).foldable, "graft_minhash's k must be a constant")
-      MinhashSignature(exprs.head, exprs(1).eval(null).asInstanceOf[Number].intValue)
+      MinhashSignature(exprs.head, intConstant("graft_minhash", "k", exprs(1)))
     })
 
   val ivfArgmaxDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
@@ -742,9 +737,7 @@ object GraftFunctions {
     (exprs: Seq[Expression]) => {
       require(exprs.length == 3,
         s"graft_pq_encode takes (embedding, books, k), got ${exprs.length} args")
-      require(exprs(2).foldable, "graft_pq_encode's k must be a constant")
-      PqEncodeCodes(exprs(0), exprs(1),
-        exprs(2).eval(null).asInstanceOf[Number].intValue)
+      PqEncodeCodes(exprs(0), exprs(1), intConstant("graft_pq_encode", "k", exprs(2)))
     })
 
   val langidDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (

@@ -72,8 +72,9 @@ object Algorithms {
                            iters: Int, d: Double = 0.85, snap: Int = 9,
                            ckptEvery: Int = 3): DataFrame = {
     require(snap > 0, "personalizedPageRank is defined with per-iteration snapping")
-    if (LocalExec.enabled(nodes.sparkSession) && LocalExec.smallEnoughGraph(nodes, edges))
-      return LocalExec.personalizedPageRankSnapped(nodes, edges, source, iters, d, snap)
+    val local = LocalExec.route(nodes, edges)(
+      LocalExec.personalizedPageRankSnapped(nodes, edges, source, iters, d, snap))
+    if (local.isDefined) return local.get
     val e = edges.select(col("src"), col("dst"))
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val ew = e.join(outdeg, Seq("src")).repartition(col("src"))
@@ -173,9 +174,8 @@ object Algorithms {
     // bounded graphs take the driver-local twin — bit-identical (exact
     // integer protocol), and an interactive-speed answer where the
     // distributed loop pays ~4·iters scheduled jobs of floor cost
-    if (LocalExec.enabled(nodes.sparkSession) &&
-        LocalExec.smallEnoughGraph(nodes, edges))
-      return LocalExec.hits(nodes, edges, iters, fp)
+    val local = LocalExec.route(nodes, edges)(LocalExec.hits(nodes, edges, iters, fp))
+    if (local.isDefined) return local.get
     val e0 = edges.select(col("src"), col("dst"))
     def layout(key: String) =
       (if (numParts > 0) e0.repartition(numParts, col(key))
@@ -265,12 +265,8 @@ object Algorithms {
     * GRAPH_SCALE.json: 48-51 s here vs 577-777 s for GraphX coloring). */
   def scc(nodes: DataFrame, edges: DataFrame, maxOuter: Int = 64,
           trimRounds: Int = 2, numParts: Int = 0): DataFrame = {
-    val spark = nodes.sparkSession
-    if (LocalExec.enabled(spark) && LocalExec.smallEnoughGraph(nodes, edges))
-      LocalExec.stronglyConnectedComponents(nodes, edges, 1 << 21) match {
-        case Some(df) => return df
-        case None => ()
-      }
+    val local = LocalExec.route(nodes, edges)(LocalExec.stronglyConnectedComponents(nodes, edges))
+    if (local.isDefined) return local.get
     def layout(df: DataFrame, key: String) =
       (if (numParts > 0) df.repartition(numParts, col(key))
        else df.repartition(col(key)))
@@ -396,9 +392,9 @@ object Algorithms {
                 sources: Option[DataFrame] = None,
                 numParts: Int = 0): DataFrame = {
     require(maxRounds >= 1, "closeness needs at least one BFS round")
-    if (sources.isEmpty && LocalExec.enabled(nodes.sparkSession) &&
-        LocalExec.smallEnoughGraph(nodes, edges))
-      return LocalExec.closeness(nodes, edges, maxRounds)
+    val local = if (sources.isDefined) None
+      else LocalExec.route(nodes, edges)(LocalExec.closeness(nodes, edges, maxRounds))
+    if (local.isDefined) return local.get
     multiSourceBfsAgg(nodes, edges, maxRounds, sources, numParts) { reached =>
       reached.groupBy(col("s").as("node"))
         .agg(count(lit(1)).as("reach"), sum(col("d").cast("long")).as("dist_sum"))
@@ -429,9 +425,9 @@ object Algorithms {
                sources: Option[DataFrame] = None,
                numParts: Int = 0): DataFrame = {
     require(maxRounds >= 1, "harmonic needs at least one BFS round")
-    if (sources.isEmpty && LocalExec.enabled(nodes.sparkSession) &&
-        LocalExec.smallEnoughGraph(nodes, edges))
-      return LocalExec.harmonic(nodes, edges, maxRounds)
+    val local = if (sources.isDefined) None
+      else LocalExec.route(nodes, edges)(LocalExec.harmonic(nodes, edges, maxRounds))
+    if (local.isDefined) return local.get
     multiSourceBfsAgg(nodes, edges, maxRounds, sources, numParts) { reached =>
       reached.groupBy(col("s").as("node"))
         .agg(sum(expr(s"CAST($HarmonicFp AS BIGINT) DIV CAST(d AS BIGINT)"))
@@ -457,9 +453,9 @@ object Algorithms {
                    sources: Option[DataFrame] = None,
                    numParts: Int = 0): DataFrame = {
     require(maxRounds >= 1, "eccentricity needs at least one BFS round")
-    if (sources.isEmpty && LocalExec.enabled(nodes.sparkSession) &&
-        LocalExec.smallEnoughGraph(nodes, edges))
-      return LocalExec.eccentricity(nodes, edges, maxRounds)
+    val local = if (sources.isDefined) None
+      else LocalExec.route(nodes, edges)(LocalExec.eccentricity(nodes, edges, maxRounds))
+    if (local.isDefined) return local.get
     multiSourceBfsAgg(nodes, edges, maxRounds, sources, numParts) { reached =>
       reached.groupBy(col("s").as("node"))
         .agg(max(col("d").cast("long")).as("ecc"),
@@ -668,9 +664,9 @@ object Algorithms {
              sources: Option[DataFrame] = None,
              numParts: Int = 0): DataFrame = {
     require(maxRounds >= 1, "stress needs at least one BFS round")
-    if (sources.isEmpty && LocalExec.enabled(nodes.sparkSession) &&
-        LocalExec.smallEnoughGraph(nodes, edges))
-      return LocalExec.stress(nodes, edges, maxRounds)
+    val local = if (sources.isDefined) None
+      else LocalExec.route(nodes, edges)(LocalExec.stress(nodes, edges, maxRounds))
+    if (local.isDefined) return local.get
     val fw = brandesForward("stress", nodes, edges, maxRounds, sources, numParts)
     val e = fw.e
     val levels = fw.levels
@@ -784,9 +780,9 @@ object Algorithms {
                   numParts: Int = 0, fp: Long = BetweennessFp): DataFrame = {
     require(maxRounds >= 1, "betweenness needs at least one BFS round")
     require(fp >= 1L, "betweenness needs a positive fixed-point scale")
-    if (sources.isEmpty && LocalExec.enabled(nodes.sparkSession) &&
-        LocalExec.smallEnoughGraph(nodes, edges))
-      return LocalExec.betweenness(nodes, edges, maxRounds, fp)
+    val local = if (sources.isDefined) None
+      else LocalExec.route(nodes, edges)(LocalExec.betweenness(nodes, edges, maxRounds, fp))
+    if (local.isDefined) return local.get
     val fw = brandesForward("betweenness", nodes, edges, maxRounds,
       sources, numParts)
     val e = fw.e
@@ -1100,13 +1096,12 @@ object Algorithms {
         LocalExec.localDF(spark, schema,
           s.map { case (n, c) => org.apache.spark.sql.Row(n, c) })
       val routed = for {
-        idRows <- LocalExec.collectBounded(
-          ids.select(col("id").cast("long")), localBounded)
+        idArr <- LocalExec.boundedIds(ids, localBounded)
         eRows <- LocalExec.collectBounded(
           e0base.select(col("a").cast("long"), col("b").cast("long"),
             col("w").cast("long")), localBounded)
       } yield toDF(LocalExec.greedyModularity(
-        idRows.map(_.getLong(0)),
+        idArr,
         eRows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
         rounds, (rd, seq) => onRound(rd, toDF(seq))))
       routed match {
@@ -1270,12 +1265,8 @@ object Algorithms {
     // the distributed pass below is 6 shuffle stages, and the 10M-edge
     // GRAPH_SCALE `triangles` row keeps it measured; GraphSpec pins the
     // routes equal (the wedge-join twin never routes local)
-    if (LocalExec.enabled(nodes.sparkSession) &&
-        LocalExec.smallEnoughGraph(nodes, edges))
-      LocalExec.triangleCounts(nodes, edges, 1 << 21) match {
-        case Some(df) => return df
-        case None => ()
-      }
+    val local = LocalExec.route(nodes, edges)(LocalExec.triangleCounts(nodes, edges))
+    if (local.isDefined) return local.get
     graft.functions.GraftFunctions.register(nodes.sparkSession)
     val dir = orientedEdges(edges)
     val adj = dir.groupBy(col("s"))
@@ -1334,12 +1325,8 @@ object Algorithms {
     * plus one degree aggregation and one node-keyed join — no
     * iteration. Nodes outside the edge set get (0, 0). */
   def clustering(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    if (LocalExec.enabled(nodes.sparkSession) &&
-        LocalExec.smallEnoughGraph(nodes, edges))
-      LocalExec.clustering(nodes, edges, 1 << 21) match {
-        case Some(df) => return df
-        case None => ()
-      }
+    val local = LocalExec.route(nodes, edges)(LocalExec.clustering(nodes, edges))
+    if (local.isDefined) return local.get
     val e = edges.select(col("src"), col("dst"))
     val canon = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") < col("dst")).distinct()
@@ -1447,18 +1434,8 @@ object Algorithms {
              localBounded: Int = 0): DataFrame = {
     require(k >= 3, "k-truss needs k >= 3 (k-2 >= 1 triangle per edge)")
     require(rounds >= 1, "kTruss needs at least one peel round")
-    val spark = edges.sparkSession
-    if (LocalExec.enabled(spark)) {
-      val bound =
-        if (localBounded > 0) localBounded
-        else if (LocalExec.smallEnoughEdges(edges)) 1 << 21
-        else 0
-      if (bound > 0)
-        LocalExec.kTruss(edges, k, rounds, bound) match {
-          case Some(df) => return df
-          case None => ()
-        }
-    }
+    val local = LocalExec.routeEdges(edges, localBounded)(LocalExec.kTruss(edges, k, rounds))
+    if (local.isDefined) return local.get
     val t = (k - 2).toLong
     val e = edges.select(col("src"), col("dst"))
     val canon0 = e.select(least(col("src"), col("dst")).as("a"),
@@ -1553,9 +1530,8 @@ object Algorithms {
                numParts: Int = 0,
                onRound: Int => Unit = _ => ()): DataFrame = {
     require(maxRounds >= 1, "coreness needs at least one h-index round")
-    if (LocalExec.enabled(nodes.sparkSession) &&
-        LocalExec.smallEnoughGraph(nodes, edges))
-      return LocalExec.coreness(nodes, edges)
+    val local = LocalExec.route(nodes, edges)(LocalExec.coreness(nodes, edges))
+    if (local.isDefined) return local.get
     val e = edges.select(col("src"), col("dst"))
     val ids = nodes.select(col("id"))
     val undBase = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
@@ -1630,18 +1606,9 @@ object Algorithms {
     val spark = edges.sparkSession
     // bounded graphs peel locally: plan-statistics-small inputs qualify
     // on their own, derived relations via the caller's probe-enforced
-    // assertion (see LocalExec.collectBounded)
-    if (LocalExec.enabled(spark)) {
-      val bound =
-        if (localBounded > 0) localBounded
-        else if (LocalExec.smallEnoughEdges(edges)) 1 << 21
-        else 0
-      if (bound > 0)
-        LocalExec.kCore(edges, k, rounds, bound) match {
-          case Some(df) => return df
-          case None => ()
-        }
-    }
+    // assertion (see LocalExec.route)
+    val local = LocalExec.routeEdges(edges, localBounded)(LocalExec.kCore(edges, k, rounds))
+    if (local.isDefined) return local.get
     // per-invocation probe name: concurrent peels on one session must not
     // destroy each other's in-flight broadcast (dropped after the loop)
     val probe = s"graft_kcore_dropped_${kCoreProbeSeq.incrementAndGet()}"
@@ -1731,18 +1698,8 @@ object Algorithms {
   def bridges(edges: DataFrame, maxRounds: Int, numParts: Int = 0,
               localBounded: Int = 0): DataFrame = {
     require(maxRounds >= 1, "bridges needs at least one BFS round")
-    val spark = edges.sparkSession
-    if (LocalExec.enabled(spark)) {
-      val bound =
-        if (localBounded > 0) localBounded
-        else if (LocalExec.smallEnoughEdges(edges)) 1 << 21
-        else 0
-      if (bound > 0)
-        LocalExec.bridges(edges, bound) match {
-          case Some(df) => return df
-          case None => ()
-        }
-    }
+    val local = LocalExec.routeEdges(edges, localBounded)(LocalExec.bridges(edges))
+    if (local.isDefined) return local.get
     val e = edges.select(col("src"), col("dst"))
     val canon0 = e.select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -1888,18 +1845,8 @@ object Algorithms {
   def articulationPoints(edges: DataFrame, maxRounds: Int, numParts: Int = 0,
                          localBounded: Int = 0): DataFrame = {
     require(maxRounds >= 1, "articulationPoints needs at least one BFS round")
-    val spark = edges.sparkSession
-    if (LocalExec.enabled(spark)) {
-      val bound =
-        if (localBounded > 0) localBounded
-        else if (LocalExec.smallEnoughEdges(edges)) 1 << 21
-        else 0
-      if (bound > 0)
-        LocalExec.articulationPoints(edges, bound) match {
-          case Some(df) => return df
-          case None => ()
-        }
-    }
+    val local = LocalExec.routeEdges(edges, localBounded)(LocalExec.articulationPoints(edges))
+    if (local.isDefined) return local.get
     val (_, lh, blockCC) =
       blockLabeling(edges, maxRounds, numParts, "articulationPoints")
     // extraction: non-root u with a child in another block; roots whose
@@ -1953,18 +1900,8 @@ object Algorithms {
                             numParts: Int = 0,
                             localBounded: Int = 0): DataFrame = {
     require(maxRounds >= 1, "biconnectedComponents needs at least one BFS round")
-    val spark = edges.sparkSession
-    if (LocalExec.enabled(spark)) {
-      val bound =
-        if (localBounded > 0) localBounded
-        else if (LocalExec.smallEnoughEdges(edges)) 1 << 21
-        else 0
-      if (bound > 0)
-        LocalExec.biconnectedComponents(edges, bound) match {
-          case Some(df) => return df
-          case None => ()
-        }
-    }
+    val local = LocalExec.routeEdges(edges, localBounded)(LocalExec.biconnectedComponents(edges))
+    if (local.isDefined) return local.get
     val (canon, lh, blockCC) =
       blockLabeling(edges, maxRounds, numParts, "biconnectedComponents")
     val tree = lh.filter(col("parent").isNotNull)
@@ -2127,17 +2064,9 @@ object Algorithms {
     // same bounded-local route as kCore: a fixed-round synchronous vote
     // over a bounded graph is rounds × (join + window) of scheduling for
     // microseconds of compute
-    if (LocalExec.enabled(nodes.sparkSession)) {
-      val bound =
-        if (localBounded > 0) localBounded
-        else if (LocalExec.smallEnoughGraph(nodes, edges)) 1 << 21
-        else 0
-      if (bound > 0)
-        LocalExec.labelPropagation(nodes, edges, rounds, bound) match {
-          case Some(df) => return df
-          case None => ()
-        }
-    }
+    val local = LocalExec.route(nodes, edges, localBounded)(
+      LocalExec.labelPropagation(nodes, edges, rounds))
+    if (local.isDefined) return local.get
     val und = {
       val e = edges.select(col("src"), col("dst"))
       e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()

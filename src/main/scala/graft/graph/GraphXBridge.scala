@@ -64,19 +64,11 @@ object GraphXBridge {
     * pointer-jumping loop it replaced. */
   def connectedComponents(spark: SparkSession, g: PropertyGraph,
                           numParts: Int = 0, localBounded: Int = 0): DataFrame = {
-    if (LocalExec.enabled(spark)) {
-      val bound =
-        if (localBounded > 0) localBounded
-        else if (LocalExec.smallEnoughGraph(g.nodes, g.edges)) 1 << 21
-        else 0
-      if (bound > 0)
-        LocalExec.connectedComponents(g.nodes, g.edges, bound) match {
-          case Some(df) => return df
-          case None => ()
-        }
+    LocalExec.route(g.nodes, g.edges, localBounded)(
+      LocalExec.connectedComponents(g.nodes, g.edges)).getOrElse {
+      val cc = toGraphX(g, numParts).connectedComponents()
+      drain(spark, cc, cc.vertices, ("node", "comp"))
     }
-    val cc = toGraphX(g, numParts).connectedComponents()
-    drain(spark, cc, cc.vertices, ("node", "comp"))
   }
 
   /** Single-source shortest path lengths via Pregel — or, when the plan
@@ -89,8 +81,8 @@ object GraphXBridge {
   def distances(spark: SparkSession, g: PropertyGraph, source: Long,
                 numParts: Int = 0): DataFrame = {
     import spark.implicits._
-    if (LocalExec.smallEnoughGraph(g.nodes, g.edges))
-      return LocalExec.distances(g.nodes, g.edges, source)
+    val local = LocalExec.route(g.nodes, g.edges)(LocalExec.distances(g.nodes, g.edges, source))
+    if (local.isDefined) return local.get
     val gx = toGraphX(g, numParts).mapVertices((id, _) =>
       if (id == source) 0L else Long.MaxValue)
     val res = gx.pregel(Long.MaxValue)(
@@ -132,8 +124,8 @@ object GraphXBridge {
   def shortestPathLength(spark: SparkSession, g: PropertyGraph, source: Long,
                          target: Long, numParts: Int = 0,
                          onRound: Int => Unit = _ => ()): Long = {
-    if (LocalExec.smallEnoughEdges(g.edges))
-      return LocalExec.shortestPathLength(g.edges, source, target)
+    val local = LocalExec.routeEdges(g.edges)(LocalExec.shortestPathLength(g.edges, source, target))
+    if (local.isDefined) return local.get
     val Unset = Long.MaxValue
     var cur = toGraphX(g, numParts).mapVertices((id, _) => (
       if (id == source) 0L else Unset,
@@ -206,8 +198,8 @@ object GraphXBridge {
   def weightedDistances(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
                         source: Long, numParts: Int = 0): DataFrame = {
     import spark.implicits._
-    if (LocalExec.smallEnoughGraph(nodes, edges))
-      return LocalExec.weightedDistances(nodes, edges, source)
+    val local = LocalExec.weightedDistances(nodes, edges, source)
+    if (local.isDefined) return local.get
     val v0 = nodes.select(col("id")).rdd.map(r => (r.getLong(0), r.getLong(0)))
     val e0 = edges.select(col("src"), col("dst"), col("w")).rdd
       .map(r => Edge(r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -247,8 +239,11 @@ object GraphXBridge {
     // is what snap exists for), so a plan-statistics-small graph may take
     // the one-collect local twin; raw-double runs stay on GraphX, whose
     // partition-order sum is part of their (engine-specific) semantics
-    if (snap > 0 && LocalExec.smallEnoughGraph(g.nodes, g.edges))
-      return LocalExec.pageRankSnapped(g.nodes, g.edges, iters, d, snap)
+    if (snap > 0) {
+      val local = LocalExec.route(g.nodes, g.edges)(
+        LocalExec.pageRankSnapped(g.nodes, g.edges, iters, d, snap))
+      if (local.isDefined) return local.get
+    }
     def snapped(r: Double): Double =
       if (snap > 0) BigDecimal(r).setScale(snap, BigDecimal.RoundingMode.HALF_UP).toDouble
       else r

@@ -39,12 +39,10 @@ object Traversals {
     * equal on the real power-law graph). */
   def kHop(edges: DataFrame, source: Long, maxHops: Int,
            numParts: Int = 0, broadcastFrontier: Boolean = false): DataFrame =
-    if (LocalExec.smallEnoughEdges(edges))
-      LocalExec.kHop(edges, source, maxHops)
-    else
+    LocalExec.routeEdges(edges)(LocalExec.kHop(edges, source, maxHops)).getOrElse(
       bfs(edges, source, Some(maxHops), numParts = numParts,
         broadcastFrontier = broadcastFrontier)
-        .filter(col("dist") >= 1)
+        .filter(col("dist") >= 1))
 
   /** Unweighted shortest-path length from src to dst (reference `ssp`);
     * -1 if unreachable, 0 when source == target. Early-exits as soon as
@@ -67,13 +65,12 @@ object Traversals {
     // probe can never see it: without this check the loop walks the whole
     // reachable set before answering 0
     if (source == target) 0L
-    else if (LocalExec.smallEnoughEdges(edges))
-      LocalExec.shortestPathLength(edges, source, target)
-    else {
-      val dists = bfs(edges, source, None, stopAt = Some(target), numParts = numParts)
-      val hit = dists.filter(col("node") === target).select(col("dist")).collect()
-      if (hit.isEmpty) -1L else hit.head.getInt(0).toLong
-    }
+    else LocalExec.routeEdges(edges)(LocalExec.shortestPathLength(edges, source, target))
+      .getOrElse {
+        val dists = bfs(edges, source, None, stopAt = Some(target), numParts = numParts)
+        val hit = dists.filter(col("node") === target).select(col("dist")).collect()
+        if (hit.isEmpty) -1L else hit.head.getInt(0).toLong
+      }
 
   /** `numParts > 0` sizes the persisted edge partitioning to the graph
     * instead of `spark.sql.shuffle.partitions` — a 760-edge grid over 32

@@ -537,7 +537,7 @@ object GraphOps {
     * longer holds falls back to the GraphX loop). */
   def connectedComponents(spark: SparkSession, dir: String): DataFrame =
     GraphXBridge.connectedComponents(spark, PropertyGraph.componentSample(spark, dir),
-      numParts = 2, localBounded = 1 << 21)
+      numParts = 2, localBounded = LocalExec.RowCap)
 
   // --- G14: k-core decomposition -------------------------------------------
 
@@ -559,7 +559,7 @@ object GraphOps {
     // 1-in-20 sample: bounded by construction (probe-enforced assertion,
     // same as g_connected_components)
     Algorithms.kCore(PropertyGraph.componentSample(spark, dir).edges,
-      KCoreK, KCoreRounds, numParts = 4, localBounded = 1 << 21)
+      KCoreK, KCoreRounds, numParts = 4, localBounded = LocalExec.RowCap)
 
   /** Unrolled synchronous peel: degree-among-survivors → keep deg >= k,
     * `rounds` times, then the survivors' in-core degrees. */
@@ -1046,7 +1046,7 @@ object GraphOps {
     // the sampled component graph is bounded by construction
     // (orders % 20, first line only) — assert it, probe-enforced
     Algorithms.greedyModularity(g.nodes, g.edges, GreedyModRounds,
-      localBounded = 1 << 21)
+      localBounded = LocalExec.RowCap)
   }
 
   /** DuckDB mirror of [[communityCluster]] — the same mutual-best merge
@@ -1367,7 +1367,7 @@ object GraphOps {
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
     Algorithms.greedyModularityWeighted(nodes, e, GreedyModRounds,
-      localBounded = 1 << 21)
+      localBounded = LocalExec.RowCap)
   }
 
   /** The G27 component sample with a weight column: l_quantity of the

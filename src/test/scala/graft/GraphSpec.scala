@@ -345,6 +345,20 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(labels(GraphXBridge.connectedComponents(spark, g, numParts = 2)) === expected,
         "GraphX loop")
     }
+    // a k-hop leaves the whole edge relation in the warm store; the
+    // caller's bound of 2 must still send CC and kCore to their loops
+    Traversals.kHop(edges, 1L, 2).collect()
+    var warmBounded = Map.empty[Long, Long]
+    val ccJobs = JobCount(spark) {
+      warmBounded = labels(GraphXBridge.connectedComponents(spark, g, localBounded = 2))
+    }
+    assert(warmBounded === expected && ccJobs > 0, s"warm bounded CC ($ccJobs jobs)")
+    val core = withLocalExecOff(labels(Algorithms.kCore(edges, 1, 5)))
+    var warmCore = Map.empty[Long, Long]
+    val coreJobs = JobCount(spark) {
+      warmCore = labels(Algorithms.kCore(edges, 1, 5, localBounded = 2))
+    }
+    assert(core.nonEmpty && warmCore === core && coreJobs > 0, s"warm bounded kCore ($coreJobs jobs)")
   }
 
   test("pageRank: ranks sum to ~1 on a strongly-connected clique; agrees with GraphX") {

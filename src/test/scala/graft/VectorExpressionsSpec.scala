@@ -256,6 +256,24 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     Similarity.planeIntsFor(31) // 31 is the documented max, must succeed
   }
 
+  test("constant-argument builders reject a string or NULL constant, naming the function") {
+    val calls = Seq(
+      "graft_bottomk" -> "graft_bottomk(id, %s)",
+      "graft_mg_candidates" -> "graft_mg_candidates(id, %s)",
+      "graft_md5h" -> "graft_md5h(array('a'), %s)",
+      "graft_simhash" -> "graft_simhash(array(1L), %s)",
+      "graft_minhash" -> "graft_minhash(array(1L), %s)",
+      "graft_pq_encode" -> "graft_pq_encode(array(1.0f), array(array(1.0f)), %s)",
+      "graft_bloom_agg" -> "graft_bloom_agg(id, %s, 3)",
+      "graft_bloom_agg" -> "graft_bloom_agg(id, 1024, %s)")
+    for ((fn, call) <- calls; arg <- Seq("'15'", "NULL")) {
+      val e = intercept[Exception](spark.range(3).selectExpr(call.format(arg)).collect())
+      val iae = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case x: IllegalArgumentException => x }
+      assert(iae.exists(_.getMessage.contains(fn)), s"${call.format(arg)} threw $e")
+    }
+  }
+
   test("interpreted path (codegen off) agrees with codegen path") {
     val df = spark.range(100).selectExpr(
       "transform(sequence(1, 32), i -> CAST(sin(id + i) AS FLOAT)) AS a",

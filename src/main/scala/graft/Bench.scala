@@ -181,14 +181,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val detailOut = sys.env.getOrElse("SPARK_GRAFT_DETAIL_OUT", DetailFile)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val listener = new QueryMetricsListener
     spark.sparkContext.addSparkListener(listener)
     // Dev-iteration knob: SPARK_GRAFT_ONLY=q1,q2 restricts the suite to
@@ -334,10 +328,8 @@ object Bench {
         val t0 = System.nanoTime()
         try run(name, fn) catch {
           case t: Throwable =>
-            // sanitize for both the JSON errors object and the sweep CSV:
-            // drop quotes/backslashes/commas and ALL control chars
-            err = Some(Option(t.getMessage).getOrElse(t.getClass.getName)
-              .replaceAll("[\\x00-\\x1f\"\\\\,]", " ").take(200))
+            // sanitized for both the JSON errors object and the sweep CSV
+            err = Some(Soak.sanitize(t))
         }
         val secs = (System.nanoTime() - t0) / 1e9
         // snapshot the gc/compile counters at the same instant as `secs`,
@@ -619,7 +611,6 @@ object BenchSweep {
     val sfDirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_SWEEP_OUT", "BENCH_SWEEP.csv")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val rows = sfDirs.flatMap { dir =>
       // Fresh SparkContext per SF section: a single sweep JVM otherwise
       // carries ~700 query executions of context-scoped aging (RDD/
@@ -630,12 +621,7 @@ object BenchSweep {
       // section's history at DETAIL-like levels, so the two artifacts
       // measure comparable schedulers and SweepSpec's agreement bar
       // compares workloads, not JVM biographies.
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.local()
       val listener = new QueryMetricsListener
       spark.sparkContext.addSparkListener(listener)
       val sf = dir.split('/').last

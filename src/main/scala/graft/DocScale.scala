@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,9 +18,10 @@ import graft.sources.Tables
   * check.
   *
   * Usage: runMain graft.DocScale [nDocs]   (default 2,000,000 = 400×
-  * sf0.1; must be a multiple of 100). Prints one JSON line:
+  * sf0.1; must be a multiple of 100). Prints one [[Soak]] line:
   * {"metric":"doc_scale","n_docs":N,"queries":{op:sec,...},
-  *  "jobs":{op:count,...},"checks":{...},"errors":{...}}
+  *  "jobs":{op:count,...},"check_secs":{...},"checks":{...},
+  *  "errors":{...}}; exit code 1 if any op errored.
   *
   * Generation is fully distributed and deterministic (hash-derived, no
   * RNG): doc i draws 40 + base%40 words from a 17,576-word vocabulary
@@ -227,14 +225,7 @@ object DocScale {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(2000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // the lexical tier has no LocalExec shortcut to force off: every
     // operator here is a corpus-scale scan/shuffle by construction; the
     // one bounded collect (dedupClusters' survivor-graph CC) is the
@@ -242,83 +233,32 @@ object DocScale {
     // stays on — the soak measures the production composition, not a
     // handicapped variant.
 
-    val jobs = new AtomicInteger
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    })
-
     val dir = s"/tmp/${Reset.ScratchPrefix}docscale"
     synthesize(spark, n, dir)
 
-    val checks = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val checkSecs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    def op(name: String)(body: => DataFrame)(check: DataFrame => Long): (String, Double, Int, Option[String]) = {
-      try org.apache.spark.graft.ListenerBarrier.waitUntilEmpty(spark.sparkContext)
-      catch { case _: Throwable => () }
-      jobs.set(0)
-      val t0 = System.nanoTime()
-      var secs = 0.0
-      var nj = 0
-      val err = try {
-        val df = body.localCheckpoint() // materialized: the operator ran
-        secs = (System.nanoTime() - t0) / 1e9
-        nj = jobs.get()
-        // verification untimed in `secs` (GraphScale contract) but its
-        // own wall is published as check_secs so a pathologically slow
-        // closed-form check is visible in the line (r19 ADVICE)
-        val c0 = System.nanoTime()
-        checks(name) = check(df)
-        checkSecs(name) = (System.nanoTime() - c0) / 1e9
-        None
-      } catch {
-        case t: Throwable =>
-          if (secs == 0.0) { secs = (System.nanoTime() - t0) / 1e9; nj = jobs.get() }
-          Some(Option(t.getMessage).getOrElse(t.getClass.getName)
-            .replaceAll("[\\x00-\\x1f\"\\\\,]", " ").take(200))
-      }
-      try org.apache.spark.graft.ListenerBarrier.waitUntilEmpty(spark.sparkContext)
-      catch { case _: Throwable => () }
-      Reset.clear(spark) // nothing shared across ops — parquet re-read each time
-      (name, secs, nj, err)
-    }
+    // nothing shared across ops — parquet re-read each time
+    val soak = new Soak(spark, "doc_scale")
+    import soak.op
+    // the gated demo LSH profile (8/4) — the exact code path of
+    // d_minhash_pairs at 400x the gate's corpus
+    op("minhash_pairs")(Dedup.minhashPairs(spark, dir))(
+      checkMinhash(spark, n, _, exactBar = false))
+    // the production profile (128 hashes / 16 bands, minhashPairsOf's
+    // default): 8-row bands push the near-dup miss probability to
+    // ~1e-14 per pair, so the recovery bar here is EXACT — and random
+    // band collisions vanish (s^8), pinning candidates ≈ plants
+    op("minhash_pairs_prod")(
+      Dedup.minhashPairsOf(Tables.documents(spark, dir)))(
+      checkMinhash(spark, n, _, exactBar = true))
+    op("simhash_pairs")(Dedup.simhashPairs(spark, dir))(
+      checkSimhash(spark, n, _))
+    op("span_dedup")(Dedup.spanDedup(spark, dir))(
+      checkSpanDedup(spark, n, _))
+    op("containment")(Dedup.containmentPairs(spark, dir))(
+      checkContainment(spark, n, _))
+    op("dedup_clusters")(Dedup.dedupClusters(spark, dir))(
+      checkClusters(spark, n, _))
 
-    val results = Seq(
-      // the gated demo LSH profile (8/4) — the exact code path of
-      // d_minhash_pairs at 400x the gate's corpus
-      op("minhash_pairs")(Dedup.minhashPairs(spark, dir))(
-        checkMinhash(spark, n, _, exactBar = false)),
-      // the production profile (128 hashes / 16 bands, minhashPairsOf's
-      // default): 8-row bands push the near-dup miss probability to
-      // ~1e-14 per pair, so the recovery bar here is EXACT — and random
-      // band collisions vanish (s^8), pinning candidates ≈ plants
-      op("minhash_pairs_prod")(
-        Dedup.minhashPairsOf(Tables.documents(spark, dir)))(
-        checkMinhash(spark, n, _, exactBar = true)),
-      op("simhash_pairs")(Dedup.simhashPairs(spark, dir))(
-        checkSimhash(spark, n, _)),
-      op("span_dedup")(Dedup.spanDedup(spark, dir))(
-        checkSpanDedup(spark, n, _)),
-      op("containment")(Dedup.containmentPairs(spark, dir))(
-        checkContainment(spark, n, _)),
-      op("dedup_clusters")(Dedup.dedupClusters(spark, dir))(
-        checkClusters(spark, n, _)))
-
-    val ok = results.filter(_._4.isEmpty)
-    def obj(f: ((String, Double, Int, Option[String])) => String): String =
-      ok.map(f).mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"doc_scale","value":${Bench.jsonNum(ok.map(_._2).sum)},""" +
-      s""""unit":"sec","n_docs":$n,""" +
-      s""""queries":${obj(r => s"\"${r._1}\":${Bench.jsonNum(r._2)}")},""" +
-      s""""jobs":${obj(r => s"\"${r._1}\":${r._3}")},""" +
-      s""""checks":${checks.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")},""" +
-      s""""check_secs":${checkSecs.map { case (k, v) => s"\"$k\":${Bench.jsonNum(v)}" }.mkString("{", ",", "}")},""" +
-      s""""errors":${results.collect { case (k, _, _, Some(e)) => s"\"$k\":\"$e\"" }.mkString("{", ",", "}")}}"""
-    println(line)
-    Reset.clear(spark, scratch = true)
-    spark.stop()
-    // same rc contract as Bench/GraphScale: rc 1 = at least one op errored
-    if (results.exists(_._4.isDefined)) sys.exit(1)
+    soak.finish("n_docs" -> n)
   }
 }

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,9 +19,10 @@ import graft.sources.Tables
   * shuffle, or a broadcast that stopped being one becomes a number.
   *
   * Usage: runMain graft.EmbedScale [nVecs]   (default 5,000,000 = 10,000×
-  * sf0.1). Prints one JSON line: {"metric":"embed_scale","n_vecs":N,
+  * sf0.1). Prints one [[Soak]] line: {"metric":"embed_scale","n_vecs":N,
   *   "dim":64,"neardup_planes":P,"queries":{op:sec,...},
-  *   "jobs":{op:count,...},"checks":{...},"errors":{...}}
+  *   "jobs":{op:count,...},"check_secs":{...},"checks":{...},
+  *   "errors":{...}}; exit code 1 if any op errored.
   *
   * Generation is fully distributed and deterministic (hash-derived, no
   * RNG): component i of vector v is xxhash64(v, i) mapped uniformly to
@@ -100,23 +98,10 @@ object EmbedScale {
     // more) — 31 planes already keeps occupancy O(1) past 2B vectors
     val neardupPlanes = math.min(31, math.max(Similarity.Planes,
       math.ceil(math.log(n.toDouble) / math.log(2.0)).toInt))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // these operators never route through LocalExec, but force the knob
     // off anyway so the soak provably measures the distributed path
     spark.conf.set(LocalExec.MaxBytesKey, "0")
-
-    val jobs = new AtomicInteger
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    })
 
     val dir = s"/tmp/${Reset.ScratchPrefix}embedscale"
     synthesize(spark, n, dir)
@@ -126,90 +111,61 @@ object EmbedScale {
     val dir4 = s"/tmp/${Reset.ScratchPrefix}embedscale_q"
     synthesize(spark, n4, dir4)
 
-    val checks = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    def op(name: String)(body: => DataFrame)(check: DataFrame => Long): (String, Double, Int, Option[String]) = {
-      try org.apache.spark.graft.ListenerBarrier.waitUntilEmpty(spark.sparkContext)
-      catch { case _: Throwable => () }
-      jobs.set(0)
-      val t0 = System.nanoTime()
-      val err = try { checks(name) = check(body); None } catch {
-        case t: Throwable => Some(Option(t.getMessage).getOrElse(t.getClass.getName)
-          .replaceAll("[\\x00-\\x1f\"\\\\,]", " ").take(200))
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
-      try org.apache.spark.graft.ListenerBarrier.waitUntilEmpty(spark.sparkContext)
-      catch { case _: Throwable => () }
-      val nj = jobs.get()
-      Reset.clear(spark) // nothing is shared across ops — parquet re-read each time
-      (name, secs, nj, err)
-    }
+    // nothing shared across ops — parquet re-read each time
+    val soak = new Soak(spark, "embed_scale")
+    import soak.op
 
     // sum of published vec_ids: a set-equality witness between the
     // graft_dot and fold-reference outlier formulations
     def idSum(df: DataFrame): Long =
       df.agg(sum(col("vec_id"))).head.getLong(0)
 
-    val results = Seq(
-      // the measured brute-force point: 8 broadcast queries × full scan
-      op("brute_topk")(Similarity.cosineTopK(spark, dir))(_.count()),
-      op("lsh_ann")(Similarity.lshAnn(spark, dir))(_.count()),
-      op("ivf_ann")(Similarity.ivfAnn(spark, dir))(_.count()),
-      op("quantized_ann")(Similarity.quantizedAnn(spark, dir))(_.count()),
-      op("kmeans_update")(Similarity.kmeansUpdate(spark, dir))(_.count()),
-      // PQ index build alone: one graft_pq_encode corpus scan. Check =
-      // planted byte-exact copies encode to identical code arrays (the
-      // encode is a pure function of the bytes), count must be n/1000.
-      op("pq_encode") {
-        val c = Similarity.pqCodes(spark, dir).localCheckpoint()
-        c.filter(col("vec_id") % 1000 === 999).selectExpr("vec_id", "codes AS ca")
-          .join(c.filter(col("vec_id") % 1000 === 998)
-              .selectExpr("vec_id + 1 AS vec_id", "codes AS cb"),
-            Seq("vec_id"))
-          .filter(col("ca") === col("cb"))
-      }(_.count()),
-      // full PQ-ADC query path over the 4-ints-per-vector codes table
-      op("pq_ann")(Similarity.pqAnn(spark, dir))(_.count()),
-      op("outlier_score")(Similarity.outlierScore(spark, dir))(idSum),
-      op("outlier_fold_ref")(outlierFoldRef(spark, dir))(idSum),
-      // the plane-scaled near-dup pair join; check = planted exact-dup
-      // pairs recovered (sim ≥ 0.99 ⇒ only the N/1000 plants)
-      op(s"neardup_p$neardupPlanes")(
-        Similarity.embedNearDup(spark, dir, neardupPlanes))(
-        _.filter(col("sim") >= 0.99).count()),
-      // SemDeDup at its production shape: K-means cells as learned
-      // buckets, K sized to the corpus (occupancy ~= n4/K), within-cell
-      // cosine pairs only. Runs on a quarter-size corpus because the
-      // honest cost is O(n·K·Dim) assignment + O(n·occupancy) pair
-      // cosines — the row exists to measure exactly that tradeoff, not
-      // to hide it. Check = EXACT plant recovery: a byte-identical copy
-      // has identical centroid cosines, so the deterministic argmax
-      // lands both copies in the same cell and the pair surfaces at
-      // sim 1.0 — recovered must equal planted, fail loud otherwise.
-      op("semantic_neardup_q")({
-        Similarity.semanticNearDup(spark, dir4, k = 1024)
-      })({ df =>
-        val got = df.filter(col("sim") >= 0.99).count()
-        val want = n4 / 1000
-        if (got != want)
-          throw new IllegalStateException(
-            s"planted $want exact-dup pairs, recovered $got")
-        got
-      }))
+    // the measured brute-force point: 8 broadcast queries × full scan
+    op("brute_topk")(Similarity.cosineTopK(spark, dir))(_.count())
+    op("lsh_ann")(Similarity.lshAnn(spark, dir))(_.count())
+    op("ivf_ann")(Similarity.ivfAnn(spark, dir))(_.count())
+    op("quantized_ann")(Similarity.quantizedAnn(spark, dir))(_.count())
+    op("kmeans_update")(Similarity.kmeansUpdate(spark, dir))(_.count())
+    // PQ index build alone: one graft_pq_encode corpus scan. Check =
+    // planted byte-exact copies encode to identical code arrays (the
+    // encode is a pure function of the bytes), count must be n/1000.
+    op("pq_encode") {
+      val c = Similarity.pqCodes(spark, dir).localCheckpoint()
+      c.filter(col("vec_id") % 1000 === 999).selectExpr("vec_id", "codes AS ca")
+        .join(c.filter(col("vec_id") % 1000 === 998)
+            .selectExpr("vec_id + 1 AS vec_id", "codes AS cb"),
+          Seq("vec_id"))
+        .filter(col("ca") === col("cb"))
+    }(_.count())
+    // full PQ-ADC query path over the 4-ints-per-vector codes table
+    op("pq_ann")(Similarity.pqAnn(spark, dir))(_.count())
+    op("outlier_score")(Similarity.outlierScore(spark, dir))(idSum)
+    op("outlier_fold_ref")(outlierFoldRef(spark, dir))(idSum)
+    // the plane-scaled near-dup pair join; check = planted exact-dup
+    // pairs recovered (sim ≥ 0.99 ⇒ only the N/1000 plants)
+    op(s"neardup_p$neardupPlanes")(
+      Similarity.embedNearDup(spark, dir, neardupPlanes))(
+      _.filter(col("sim") >= 0.99).count())
+    // SemDeDup at its production shape: K-means cells as learned
+    // buckets, K sized to the corpus (occupancy ~= n4/K), within-cell
+    // cosine pairs only. Runs on a quarter-size corpus because the
+    // honest cost is O(n·K·Dim) assignment + O(n·occupancy) pair
+    // cosines — the row exists to measure exactly that tradeoff, not
+    // to hide it. Check = EXACT plant recovery: a byte-identical copy
+    // has identical centroid cosines, so the deterministic argmax
+    // lands both copies in the same cell and the pair surfaces at
+    // sim 1.0 — recovered must equal planted, fail loud otherwise.
+    op("semantic_neardup_q")({
+      Similarity.semanticNearDup(spark, dir4, k = 1024)
+    })({ df =>
+      val got = df.filter(col("sim") >= 0.99).count()
+      val want = n4 / 1000
+      if (got != want)
+        throw new IllegalStateException(
+          s"planted $want exact-dup pairs, recovered $got")
+      got
+    })
 
-    val ok = results.filter(_._4.isEmpty)
-    def obj(f: ((String, Double, Int, Option[String])) => String): String =
-      ok.map(f).mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"embed_scale","value":${Bench.jsonNum(ok.map(_._2).sum)},""" +
-      s""""unit":"sec","n_vecs":$n,"dim":$Dim,"neardup_planes":$neardupPlanes,""" +
-      s""""queries":${obj(r => s"\"${r._1}\":${Bench.jsonNum(r._2)}")},""" +
-      s""""jobs":${obj(r => s"\"${r._1}\":${r._3}")},""" +
-      s""""checks":${checks.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")},""" +
-      s""""errors":${results.collect { case (k, _, _, Some(e)) => s"\"$k\":\"$e\"" }.mkString("{", ",", "}")}}"""
-    println(line)
-    Reset.clear(spark, scratch = true)
-    spark.stop()
-    // same rc contract as Bench/GraphScale: rc 1 = at least one op errored
-    if (results.exists(_._4.isDefined)) sys.exit(1)
+    soak.finish("n_vecs" -> n, "dim" -> Dim.toLong, "neardup_planes" -> neardupPlanes.toLong)
   }
 }

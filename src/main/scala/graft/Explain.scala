@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 
 /** Dev tool: time and/or explain individual SparkEntry queries.
   *
@@ -19,39 +19,22 @@ object Explain {
     val doJobs = flags.contains("--jobs")
     val sfDir = rest.head
     val names = if (rest.length > 1) rest.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    if (doJobs) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      })
+    val spark = GraftSession.local()
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      if (doJobs) {
-        org.apache.spark.graft.ListenerBarrier.waitUntilEmpty(spark.sparkContext)
-        jobs.set(0)
+      var df: DataFrame = null
+      var t0, tPlan, tRun = 0L
+      def build(): Unit = {
+        t0 = System.nanoTime()
+        df = fn(spark, sfDir)
+        tPlan = System.nanoTime()
+        if (doExplain) { println(s"== $name =="); df.explain("formatted") }
+        // noop materialization, same as Bench (count() would let Catalyst
+        // prune every unreferenced column out of the timing)
+        df.write.mode("overwrite").format("noop").save()
+        tRun = System.nanoTime()
       }
-      val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      val tPlan = System.nanoTime()
-      if (doExplain) { println(s"== $name =="); df.explain("formatted") }
-      // noop materialization, same as Bench (count() would let Catalyst
-      // prune every unreferenced column out of the timing)
-      df.write.mode("overwrite").format("noop").save()
-      val tRun = System.nanoTime()
-      val jn = if (doJobs) {
-        org.apache.spark.graft.ListenerBarrier.waitUntilEmpty(spark.sparkContext)
-        s" jobs=${jobs.get()}"
-      } else ""
+      val jn = if (doJobs) s" jobs=${JobCount(spark)(build())}" else { build(); "" }
       val n = df.count()
       println(f"$name%-24s build=${(tPlan - t0) / 1e9}%8.3fs run=${(tRun - tPlan) / 1e9}%8.3fs rows=$n$jn")
       Reset.clear(spark)

@@ -2,7 +2,6 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,9 +22,10 @@ import graft.graph.{Algorithms, GraphXBridge, LocalExec, PropertyGraph, Traversa
   * job-count explosion in the distributed path becomes a number.
   *
   * Usage: runMain graft.GraphScale [nEdges]   (default 10,000,000)
-  * Prints: {"metric":"graph_scale","n_nodes":N,"n_edges":E,
-  *   "queries":{op:sec,...},"jobs":{op:count,...},"checks":{...},
-  *   "errors":{...}}
+  * Prints one [[Soak]] line: {"metric":"graph_scale","n_nodes":N,
+  *   "n_edges":E,"queries":{op:sec,...},"jobs":{op:count,...},
+  *   "check_secs":{...},"checks":{...},"errors":{...}}; exit code 1 if
+  *   any op errored.
   *
   * Generation is fully distributed and deterministic (hash-derived, no
   * RNG): endpoint = floor(N·u²) with u = xxhash64-uniform in [0,1), so
@@ -168,22 +168,10 @@ object GraphScale {
     val only: Set[String] = args.drop(1).headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).getOrElse(Set.empty)
     val nNodes = math.max(16L, nEdges / 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // the graph is over-budget by construction; force the knob anyway so
     // the soak cannot silently measure the local path after a budget bump
     spark.conf.set(LocalExec.MaxBytesKey, "0")
-
-    val jobs = new AtomicInteger
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    })
 
     val edges = powerLawEdges(spark, nEdges, nNodes).localCheckpoint()
     val nodes = spark.range(nNodes).select(col("id"))
@@ -195,7 +183,15 @@ object GraphScale {
     val wEdges = edges.selectExpr("src", "dst",
       "CAST(1 + pmod(xxhash64(src, dst, 7), 8) AS BIGINT) AS w")
 
-    val checks = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    // NO Reset.clear between ops: it would evict the shared edge
+    // checkpoint blocks (checkpointRDDBlockIdNotFound on the next op).
+    // The iterative ops drain their own intermediate caches; the soak
+    // accepts their residue rather than regenerating 10M edges 6 times.
+    // The one op whose timing interleaves a check is
+    // greedy_modularity_10m: its onRound Q-scan runs INSIDE the operator
+    // loop by design (noted at the row).
+    val soak = new Soak(spark, "graph_scale", only, clearBetween = false)
+    import soak.{checks, op}
     // per-round Q numerators stashed by greedy_modularity_10m's body for
     // its check lambda (the op() contract passes only the result frame)
     var gmQnums: scala.collection.mutable.ArrayBuffer[Long] =
@@ -203,597 +199,529 @@ object GraphScale {
     // the weighted row's twin stash (greedy_modularity_w_10m)
     var gmwQnums: scala.collection.mutable.ArrayBuffer[Long] =
       scala.collection.mutable.ArrayBuffer.empty
-    // the verification wall per op, published alongside "queries" —
-    // see the op() timing contract below
-    val checkSecs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // Timing contract (since r18): "queries" times the OPERATOR — body
-    // construction plus one full materialization (localCheckpoint) —
-    // and "check_secs" times the verification separately. Earlier lines
-    // timed check(body) as one window, which was honest for the cheap
-    // aggregate checks but let heavy verifications (betweenness's two
-    // 32-source recomputes, ~2x the operator itself) masquerade as
-    // operator seconds. Cross-round note: pre-r18 "queries" values ≈
-    // queries + check_secs of this encoding. The one residual
-    // interleaving is greedy_modularity_10m's onRound Q-scan, which
-    // runs INSIDE the operator loop by design (noted at the row).
-    // "jobs" likewise counts only the operator window's scheduled jobs.
-    def op(name: String)(body: => DataFrame)(check: DataFrame => Long): (String, Double, Int, Option[String]) = {
-      if (only.nonEmpty && !only.contains(name))
-        return (name, 0.0, 0, Some("skipped (op filter)"))
-      try org.apache.spark.graft.ListenerBarrier.waitUntilEmpty(spark.sparkContext)
-      catch { case _: Throwable => () }
-      jobs.set(0)
-      val t0 = System.nanoTime()
-      var secs = 0.0
-      var n = 0
-      val err = try {
-        val df = body.localCheckpoint() // materialized: the operator ran
-        secs = (System.nanoTime() - t0) / 1e9
-        n = jobs.get()
-        val c0 = System.nanoTime()
-        checks(name) = check(df)
-        checkSecs(name) = (System.nanoTime() - c0) / 1e9
-        None
-      } catch {
-        case t: Throwable =>
-          if (secs == 0.0) { secs = (System.nanoTime() - t0) / 1e9; n = jobs.get() }
-          Some(Option(t.getMessage).getOrElse(t.getClass.getName)
-            .replaceAll("[\\x00-\\x1f\"\\\\,]", " ").take(200))
+
+    // the one distributed CC loop, behind the gated query
+    op("cc_graphx")(GraphXBridge.connectedComponents(spark, g))(
+      _.agg(countDistinct(col("comp"))).head.getLong(0))
+    op("kcore_k3")(Algorithms.kCore(edges, k = 3, rounds = 10))(_.count())
+    op("pagerank_10it")(GraphXBridge.pageRank(spark, g, iters = 10))(
+      // ranks start probability-normalized (1/N), but the power-law
+      // generator leaves most high-id nodes DANGLING (no out-edges)
+      // and pageRank does not redistribute their mass, so total mass
+      // decays below 1 each iteration (~0.787 at 10 iterations on the
+      // default sizes). Recorded in ppm: a stable nonzero integer
+      // whose drift would flag a semantics change in either the
+      // generator's skew or the dangling handling.
+      df => (df.agg(sum(col("rank"))).head.getDouble(0) * 1e6).toLong)
+    op("triangles")(Algorithms.triangleCounts(nodes, edges))(
+      _.agg(sum(col("n_tri"))).head.getLong(0))
+    op("bfs_hub_d10")(Traversals.kHop(edges, source = 0L, maxHops = 10))(_.count())
+    // batched multi-source closeness with SAMPLED sources — the form
+    // exact-closeness takes at corpus scale (G21's docstring claim,
+    // measured here): 64 evenly-spaced sources advance through ONE
+    // join + dedup + anti-join per round on composite (s, node) keys.
+    // Check = EXACT (reach, dist_sum) agreement with an independent
+    // per-source recompute (GraphX Pregel SSSP) on 2 of the 64
+    // sources — the hub and a mid-mass source; recorded value =
+    // Σ reach over all sources.
+    op("closeness_s64")({
+      val step = math.max(1L, nNodes / 64)
+      val srcs = nodes.filter(col("id") % step === 0 && col("id") < step * 64)
+      Algorithms.closeness(nodes, edges, maxRounds = 40, sources = Some(srcs))
+    })({ df =>
+      val lab = df.localCheckpoint()
+      val step = math.max(1L, nNodes / 64)
+      Seq(0L, 17L * step).foreach { s =>
+        val d = GraphXBridge.distances(spark, g, s).localCheckpoint()
+        val reach = d.count() - 1 // distances includes the source at 0
+        val dsum = d.agg(sum(col("dist"))).head.getLong(0)
+        val row = lab.filter(col("node") === s)
+          .select(col("reach"), col("dist_sum")).head
+        if (row.getLong(0) != reach || row.getLong(1) != dsum)
+          throw new IllegalStateException(
+            s"source $s: batched (${row.getLong(0)}, ${row.getLong(1)}) " +
+              s"!= per-source BFS ($reach, $dsum)")
       }
-      try org.apache.spark.graft.ListenerBarrier.waitUntilEmpty(spark.sparkContext)
-      catch { case _: Throwable => () }
-      // NO Reset.clear between ops: it would evict the shared edge
-      // checkpoint blocks (checkpointRDDBlockIdNotFound on the next op).
-      // The iterative ops drain their own intermediate caches; the soak
-      // accepts their residue rather than regenerating 10M edges 6 times.
-      (name, secs, n, err)
-    }
-
-    val results = Seq(
-      // the one distributed CC loop, behind the gated query
-      op("cc_graphx")(GraphXBridge.connectedComponents(spark, g))(
-        _.agg(countDistinct(col("comp"))).head.getLong(0)),
-      op("kcore_k3")(Algorithms.kCore(edges, k = 3, rounds = 10))(_.count()),
-      op("pagerank_10it")(GraphXBridge.pageRank(spark, g, iters = 10))(
-        // ranks start probability-normalized (1/N), but the power-law
-        // generator leaves most high-id nodes DANGLING (no out-edges)
-        // and pageRank does not redistribute their mass, so total mass
-        // decays below 1 each iteration (~0.787 at 10 iterations on the
-        // default sizes). Recorded in ppm: a stable nonzero integer
-        // whose drift would flag a semantics change in either the
-        // generator's skew or the dangling handling.
-        df => (df.agg(sum(col("rank"))).head.getDouble(0) * 1e6).toLong),
-      op("triangles")(Algorithms.triangleCounts(nodes, edges))(
-        _.agg(sum(col("n_tri"))).head.getLong(0)),
-      op("bfs_hub_d10")(Traversals.kHop(edges, source = 0L, maxHops = 10))(_.count()),
-      // batched multi-source closeness with SAMPLED sources — the form
-      // exact-closeness takes at corpus scale (G21's docstring claim,
-      // measured here): 64 evenly-spaced sources advance through ONE
-      // join + dedup + anti-join per round on composite (s, node) keys.
-      // Check = EXACT (reach, dist_sum) agreement with an independent
-      // per-source recompute (GraphX Pregel SSSP) on 2 of the 64
-      // sources — the hub and a mid-mass source; recorded value =
-      // Σ reach over all sources.
-      op("closeness_s64")({
-        val step = math.max(1L, nNodes / 64)
-        val srcs = nodes.filter(col("id") % step === 0 && col("id") < step * 64)
-        Algorithms.closeness(nodes, edges, maxRounds = 40, sources = Some(srcs))
-      })({ df =>
-        val lab = df.localCheckpoint()
-        val step = math.max(1L, nNodes / 64)
-        Seq(0L, 17L * step).foreach { s =>
-          val d = GraphXBridge.distances(spark, g, s).localCheckpoint()
-          val reach = d.count() - 1 // distances includes the source at 0
-          val dsum = d.agg(sum(col("dist"))).head.getLong(0)
-          val row = lab.filter(col("node") === s)
-            .select(col("reach"), col("dist_sum")).head
-          if (row.getLong(0) != reach || row.getLong(1) != dsum)
-            throw new IllegalStateException(
-              s"source $s: batched (${row.getLong(0)}, ${row.getLong(1)}) " +
-                s"!= per-source BFS ($reach, $dsum)")
-        }
-        lab.agg(sum(col("reach"))).head.getLong(0)
-      }),
-      // all-sources batched Brandes stress on a 1M-node PERFECT BINARY
-      // TREE — the one large topology where exact stress is both
-      // integer-safe (σ ≡ 1 on a tree; ψ ≤ subtree size) and closed-form
-      // checkable on EVERY node: only downward paths exist, so
-      // stress(v) = ancestors(v) · descendants(v) = d · (2^(L−d) − 2).
-      // (On small-world graphs σ grows past BIGINT within ~10 hops —
-      // since r16 that is ENFORCED, not a caveat: both stress routes
-      // carry per-level overflow guards that fail loud (GraphSpec pins
-      // it on a planted layered digraph); exact stress there is run
-      // with sampled sources AND a bounded horizon. The tree keeps the
-      // soak's check exact at full width: 2^20−1 sources advance
-      // through the same two batched passes.)
-      op("stress_tree_1m")({
-        val l = 20
-        val tn = (1L << l) - 1
-        val tNodes = spark.range(tn).select(col("id"))
-        val tEdges = spark.range((tn - 1) / 2)
-          .selectExpr("id AS src", "2*id+1 AS dst")
-          .union(spark.range((tn - 1) / 2)
-            .selectExpr("id AS src", "2*id+2 AS dst"))
-        Algorithms.stress(tNodes, tEdges, maxRounds = l + 2)
-      })({ df =>
-        val l = 20
-        val tn = (1L << l) - 1
-        // closed form per node; floor(log2) is exact here (powers of two
-        // are exact doubles and the floor never straddles one)
-        val expect = spark.range(tn).selectExpr("id AS node",
-          s"""CAST(floor(log2(id + 1)) AS BIGINT)
-             | * (CAST(pow(2, $l - floor(log2(id + 1))) AS BIGINT) - 2)
-             | AS exp_stress""".stripMargin)
-        val lab = df.localCheckpoint()
-        val bad = lab.join(expect, Seq("node"))
-          .filter(col("stress") =!= col("exp_stress")).count()
-        if (bad != 0)
-          throw new IllegalStateException(s"$bad nodes off the closed form")
-        lab.agg(sum(col("stress"))).head.getLong(0)
-      }),
-      // batched multi-source HARMONIC with the same 64 sampled sources —
-      // rides the identical level builder as closeness_s64 (one join +
-      // dedup + anti-join per round); check = EXACT harmonic_fp
-      // agreement with an independent per-source recompute (GraphX
-      // Pregel SSSP distances folded through the same `HarmonicFp DIV d`
-      // fixed-point formula) on 2 of the 64 sources; recorded value =
-      // Σ harmonic_fp over all sources.
-      op("harmonic_s64")({
-        val step = math.max(1L, nNodes / 64)
-        val srcs = nodes.filter(col("id") % step === 0 && col("id") < step * 64)
-        Algorithms.harmonic(nodes, edges, maxRounds = 40, sources = Some(srcs))
-      })({ df =>
-        val lab = df.localCheckpoint()
-        val step = math.max(1L, nNodes / 64)
-        Seq(0L, 17L * step).foreach { s =>
-          val d = GraphXBridge.distances(spark, g, s).localCheckpoint()
-          // bound the recompute to the SAME 40-hop horizon the batched
-          // operator ran under (maxRounds = 40 above): an unbounded SSSP
-          // would count nodes past the cap and throw a spuriously-loud
-          // mismatch on any checked source whose eccentricity exceeds it
-          val r = d.filter(col("dist") > 0 && col("dist") <= 40).agg(sum(expr(
-            s"CAST(${Algorithms.HarmonicFp} AS BIGINT) DIV CAST(dist AS BIGINT)"))).head
-          val hsum = if (r.isNullAt(0)) 0L else r.getLong(0)
-          val row = lab.filter(col("node") === s).select(col("harmonic_fp")).head
-          if (row.getLong(0) != hsum)
-            throw new IllegalStateException(
-              s"source $s: batched ${row.getLong(0)} != per-source SSSP harmonic $hsum")
-        }
-        lab.agg(sum(col("harmonic_fp"))).head.getLong(0)
-      }),
-      // all-sources fixed-point Brandes BETWEENNESS on the same 1M-node
-      // perfect binary tree: σ ≡ 1 on a tree, so every protocol division
-      // is exact ((1·(Fp+δ)) DIV 1) and betweenness coincides with
-      // stress — bc_fp(v) = Fp · ancestors(v) · descendants(v), closed-
-      // form checkable on EVERY node. This is the δ backward pass (the
-      // code stress does NOT run) at 2^20−1 sources through ~20 levels,
-      // with the per-level δ-max guard agg in the measured wall.
-      op("betweenness_tree_1m")({
-        val l = 20
-        val tn = (1L << l) - 1
-        val tNodes = spark.range(tn).select(col("id"))
-        val tEdges = spark.range((tn - 1) / 2)
-          .selectExpr("id AS src", "2*id+1 AS dst")
-          .union(spark.range((tn - 1) / 2)
-            .selectExpr("id AS src", "2*id+2 AS dst"))
-        Algorithms.betweenness(tNodes, tEdges, maxRounds = l + 2)
-      })({ df =>
-        val l = 20
-        val tn = (1L << l) - 1
-        val expect = spark.range(tn).selectExpr("id AS node",
-          s"""CAST(${Algorithms.BetweennessFp} AS BIGINT)
-             | * CAST(floor(log2(id + 1)) AS BIGINT)
-             | * (CAST(pow(2, $l - floor(log2(id + 1))) AS BIGINT) - 2)
-             | AS exp_bc""".stripMargin)
-        val lab = df.localCheckpoint()
-        val bad = lab.join(expect, Seq("node"))
-          .filter(col("bc_fp") =!= col("exp_bc")).count()
-        if (bad != 0)
-          throw new IllegalStateException(s"$bad nodes off the closed form")
-        lab.agg(sum(col("bc_fp").cast("decimal(38,0)"))).head
-          .getDecimal(0).longValue() / Algorithms.BetweennessFp
-      }),
-      // batched multi-source BETWEENNESS on the power-law graph itself —
-      // the skewed-degree complement of the tree row (which is closed-
-      // form-checkable but degree-1-ish): 64 sampled sources, horizon 6
-      // (σ grows through the ~20k-degree hub, so the bounded horizon is
-      // the honest corpus-scale form — the per-level overflow guard
-      // fails loud rather than wrapping if σ outgrows BIGINT). Check =
-      // EXACT additivity over a source-set split: δ accumulations are
-      // per-source independent, so two disjoint 32-source runs (their
-      // own level structures, their own guard schedules) must sum to
-      // the 64-source table bit-for-bit under the integer fixed-point
-      // protocol. Recorded value = nodes with nonzero centrality.
-      op("betweenness_s64_powerlaw")({
-        val step = math.max(1L, nNodes / 64)
-        val srcs = nodes.filter(col("id") % step === 0 && col("id") < step * 64)
-        Algorithms.betweenness(nodes, edges, maxRounds = 6, sources = Some(srcs))
-      })({ df =>
-        val lab = df.localCheckpoint()
-        val step = math.max(1L, nNodes / 64)
-        val even = nodes.filter(col("id") % (2 * step) === 0 &&
-          col("id") < step * 64)
-        val odd = nodes.filter(col("id") % step === 0 &&
-          col("id") % (2 * step) =!= 0 && col("id") < step * 64)
-        val a = Algorithms.betweenness(nodes, edges, maxRounds = 6,
-          sources = Some(even)).select(col("node"), col("bc_fp").as("bc_a"))
-        val b = Algorithms.betweenness(nodes, edges, maxRounds = 6,
-          sources = Some(odd)).select(col("node"), col("bc_fp").as("bc_b"))
-        val bad = lab.join(a, Seq("node")).join(b, Seq("node"))
-          .filter(col("bc_fp") =!= col("bc_a") + col("bc_b")).count()
-        if (bad != 0)
+      lab.agg(sum(col("reach"))).head.getLong(0)
+    })
+    // all-sources batched Brandes stress on a 1M-node PERFECT BINARY
+    // TREE — the one large topology where exact stress is both
+    // integer-safe (σ ≡ 1 on a tree; ψ ≤ subtree size) and closed-form
+    // checkable on EVERY node: only downward paths exist, so
+    // stress(v) = ancestors(v) · descendants(v) = d · (2^(L−d) − 2).
+    // (On small-world graphs σ grows past BIGINT within ~10 hops —
+    // since r16 that is ENFORCED, not a caveat: both stress routes
+    // carry per-level overflow guards that fail loud (GraphSpec pins
+    // it on a planted layered digraph); exact stress there is run
+    // with sampled sources AND a bounded horizon. The tree keeps the
+    // soak's check exact at full width: 2^20−1 sources advance
+    // through the same two batched passes.)
+    op("stress_tree_1m")({
+      val l = 20
+      val tn = (1L << l) - 1
+      val tNodes = spark.range(tn).select(col("id"))
+      val tEdges = spark.range((tn - 1) / 2)
+        .selectExpr("id AS src", "2*id+1 AS dst")
+        .union(spark.range((tn - 1) / 2)
+          .selectExpr("id AS src", "2*id+2 AS dst"))
+      Algorithms.stress(tNodes, tEdges, maxRounds = l + 2)
+    })({ df =>
+      val l = 20
+      val tn = (1L << l) - 1
+      // closed form per node; floor(log2) is exact here (powers of two
+      // are exact doubles and the floor never straddles one)
+      val expect = spark.range(tn).selectExpr("id AS node",
+        s"""CAST(floor(log2(id + 1)) AS BIGINT)
+           | * (CAST(pow(2, $l - floor(log2(id + 1))) AS BIGINT) - 2)
+           | AS exp_stress""".stripMargin)
+      val lab = df.localCheckpoint()
+      val bad = lab.join(expect, Seq("node"))
+        .filter(col("stress") =!= col("exp_stress")).count()
+      if (bad != 0)
+        throw new IllegalStateException(s"$bad nodes off the closed form")
+      lab.agg(sum(col("stress"))).head.getLong(0)
+    })
+    // batched multi-source HARMONIC with the same 64 sampled sources —
+    // rides the identical level builder as closeness_s64 (one join +
+    // dedup + anti-join per round); check = EXACT harmonic_fp
+    // agreement with an independent per-source recompute (GraphX
+    // Pregel SSSP distances folded through the same `HarmonicFp DIV d`
+    // fixed-point formula) on 2 of the 64 sources; recorded value =
+    // Σ harmonic_fp over all sources.
+    op("harmonic_s64")({
+      val step = math.max(1L, nNodes / 64)
+      val srcs = nodes.filter(col("id") % step === 0 && col("id") < step * 64)
+      Algorithms.harmonic(nodes, edges, maxRounds = 40, sources = Some(srcs))
+    })({ df =>
+      val lab = df.localCheckpoint()
+      val step = math.max(1L, nNodes / 64)
+      Seq(0L, 17L * step).foreach { s =>
+        val d = GraphXBridge.distances(spark, g, s).localCheckpoint()
+        // bound the recompute to the SAME 40-hop horizon the batched
+        // operator ran under (maxRounds = 40 above): an unbounded SSSP
+        // would count nodes past the cap and throw a spuriously-loud
+        // mismatch on any checked source whose eccentricity exceeds it
+        val r = d.filter(col("dist") > 0 && col("dist") <= 40).agg(sum(expr(
+          s"CAST(${Algorithms.HarmonicFp} AS BIGINT) DIV CAST(dist AS BIGINT)"))).head
+        val hsum = if (r.isNullAt(0)) 0L else r.getLong(0)
+        val row = lab.filter(col("node") === s).select(col("harmonic_fp")).head
+        if (row.getLong(0) != hsum)
           throw new IllegalStateException(
-            s"$bad nodes where the 64-source run differs from the sum of " +
-              "its disjoint 32-source halves")
-        lab.filter(col("bc_fp") > 0).count()
-      }),
-      // greedy modularity at 10M edges — the one family whose round
-      // count and per-round cost are data-dependent, so "job counts
-      // identical at 50x" could not be claimed from the gated instance
-      // alone (r16 gap #1). onRound scores each merged round's partition
-      // with G26's exact integer numerator; the check asserts Q is
-      // STRICTLY monotone from the singleton baseline through every
-      // merged round (mutual-positive merges can only raise Q — a
-      // violation means a merge was not mutual-positive) and that every
-      // community's label is one of its members. Recorded value = the
-      // final community count.
-      op("greedy_modularity_10m")({
-        val qn = scala.collection.mutable.ArrayBuffer.empty[Long]
-        gmQnums = qn
-        Algorithms.greedyModularity(nodes, edges, rounds = 5,
-          onRound = (_, c) => qn += Algorithms.modularity(edges, c)
-            .agg(sum(col("q_num_4m2"))).head.getLong(0))
-      })({ df =>
-        val lab = df.localCheckpoint()
-        val q0 = Algorithms.modularity(edges,
-            nodes.select(col("id").as("node"), col("id").as("community")))
-          .agg(sum(col("q_num_4m2"))).head.getLong(0)
-        val traj = q0 +: gmQnums.toSeq
-        traj.sliding(2).foreach {
-          case Seq(p, n) if n <= p =>
-            throw new IllegalStateException(
-              s"Q numerator not strictly monotone: $traj")
-          case _ => ()
-        }
-        val nComm = lab.agg(countDistinct(col("community"))).head.getLong(0)
-        val selfLabeled = lab.filter(col("node") === col("community")).count()
-        if (selfLabeled != nComm)
+            s"source $s: batched ${row.getLong(0)} != per-source SSSP harmonic $hsum")
+      }
+      lab.agg(sum(col("harmonic_fp"))).head.getLong(0)
+    })
+    // all-sources fixed-point Brandes BETWEENNESS on the same 1M-node
+    // perfect binary tree: σ ≡ 1 on a tree, so every protocol division
+    // is exact ((1·(Fp+δ)) DIV 1) and betweenness coincides with
+    // stress — bc_fp(v) = Fp · ancestors(v) · descendants(v), closed-
+    // form checkable on EVERY node. This is the δ backward pass (the
+    // code stress does NOT run) at 2^20−1 sources through ~20 levels,
+    // with the per-level δ-max guard agg in the measured wall.
+    op("betweenness_tree_1m")({
+      val l = 20
+      val tn = (1L << l) - 1
+      val tNodes = spark.range(tn).select(col("id"))
+      val tEdges = spark.range((tn - 1) / 2)
+        .selectExpr("id AS src", "2*id+1 AS dst")
+        .union(spark.range((tn - 1) / 2)
+          .selectExpr("id AS src", "2*id+2 AS dst"))
+      Algorithms.betweenness(tNodes, tEdges, maxRounds = l + 2)
+    })({ df =>
+      val l = 20
+      val tn = (1L << l) - 1
+      val expect = spark.range(tn).selectExpr("id AS node",
+        s"""CAST(${Algorithms.BetweennessFp} AS BIGINT)
+           | * CAST(floor(log2(id + 1)) AS BIGINT)
+           | * (CAST(pow(2, $l - floor(log2(id + 1))) AS BIGINT) - 2)
+           | AS exp_bc""".stripMargin)
+      val lab = df.localCheckpoint()
+      val bad = lab.join(expect, Seq("node"))
+        .filter(col("bc_fp") =!= col("exp_bc")).count()
+      if (bad != 0)
+        throw new IllegalStateException(s"$bad nodes off the closed form")
+      lab.agg(sum(col("bc_fp").cast("decimal(38,0)"))).head
+        .getDecimal(0).longValue() / Algorithms.BetweennessFp
+    })
+    // batched multi-source BETWEENNESS on the power-law graph itself —
+    // the skewed-degree complement of the tree row (which is closed-
+    // form-checkable but degree-1-ish): 64 sampled sources, horizon 6
+    // (σ grows through the ~20k-degree hub, so the bounded horizon is
+    // the honest corpus-scale form — the per-level overflow guard
+    // fails loud rather than wrapping if σ outgrows BIGINT). Check =
+    // EXACT additivity over a source-set split: δ accumulations are
+    // per-source independent, so two disjoint 32-source runs (their
+    // own level structures, their own guard schedules) must sum to
+    // the 64-source table bit-for-bit under the integer fixed-point
+    // protocol. Recorded value = nodes with nonzero centrality.
+    op("betweenness_s64_powerlaw")({
+      val step = math.max(1L, nNodes / 64)
+      val srcs = nodes.filter(col("id") % step === 0 && col("id") < step * 64)
+      Algorithms.betweenness(nodes, edges, maxRounds = 6, sources = Some(srcs))
+    })({ df =>
+      val lab = df.localCheckpoint()
+      val step = math.max(1L, nNodes / 64)
+      val even = nodes.filter(col("id") % (2 * step) === 0 &&
+        col("id") < step * 64)
+      val odd = nodes.filter(col("id") % step === 0 &&
+        col("id") % (2 * step) =!= 0 && col("id") < step * 64)
+      val a = Algorithms.betweenness(nodes, edges, maxRounds = 6,
+        sources = Some(even)).select(col("node"), col("bc_fp").as("bc_a"))
+      val b = Algorithms.betweenness(nodes, edges, maxRounds = 6,
+        sources = Some(odd)).select(col("node"), col("bc_fp").as("bc_b"))
+      val bad = lab.join(a, Seq("node")).join(b, Seq("node"))
+        .filter(col("bc_fp") =!= col("bc_a") + col("bc_b")).count()
+      if (bad != 0)
+        throw new IllegalStateException(
+          s"$bad nodes where the 64-source run differs from the sum of " +
+            "its disjoint 32-source halves")
+      lab.filter(col("bc_fp") > 0).count()
+    })
+    // greedy modularity at 10M edges — the one family whose round
+    // count and per-round cost are data-dependent, so "job counts
+    // identical at 50x" could not be claimed from the gated instance
+    // alone (r16 gap #1). onRound scores each merged round's partition
+    // with G26's exact integer numerator; the check asserts Q is
+    // STRICTLY monotone from the singleton baseline through every
+    // merged round (mutual-positive merges can only raise Q — a
+    // violation means a merge was not mutual-positive) and that every
+    // community's label is one of its members. Recorded value = the
+    // final community count.
+    op("greedy_modularity_10m")({
+      val qn = scala.collection.mutable.ArrayBuffer.empty[Long]
+      gmQnums = qn
+      Algorithms.greedyModularity(nodes, edges, rounds = 5,
+        onRound = (_, c) => qn += Algorithms.modularity(edges, c)
+          .agg(sum(col("q_num_4m2"))).head.getLong(0))
+    })({ df =>
+      val lab = df.localCheckpoint()
+      val q0 = Algorithms.modularity(edges,
+          nodes.select(col("id").as("node"), col("id").as("community")))
+        .agg(sum(col("q_num_4m2"))).head.getLong(0)
+      val traj = q0 +: gmQnums.toSeq
+      traj.sliding(2).foreach {
+        case Seq(p, n) if n <= p =>
           throw new IllegalStateException(
-            s"$nComm communities but $selfLabeled self-labeled nodes — " +
-              "some label is not a member of its community")
-        checks("greedy_modularity_10m_rounds") = gmQnums.size.toLong
-        nComm
-      }),
-      // k-truss peel at 10M edges — the last iterative structure operator
-      // without a ≥10M-edge measurement (r17 gap #1): k=5 (support ≥ 3)
-      // does a real cascading peel on the power-law core; rounds=30 is a
-      // generous cap whose unused tail is free (early exit at fixpoint).
-      // Check (untimed): (1) zero survivor edges under support k−2 — this
-      // certifies the peel CONVERGED (on a cap exit the trailing recompute
-      // would expose below-threshold survivors); (2) partition invariance
-      // of the support recompute: a fresh edgeSupports pass over the
-      // survivors at a different width must reproduce the published table
-      // bit-for-bit (the hits_5it check pattern). Recorded value =
-      // surviving edge count.
-      op("ktruss_k5")(Algorithms.kTruss(edges, k = 5, rounds = 30,
-        numParts = 32))({ df =>
-        val below = df.filter(col("support") < 3L).count()
-        if (below != 0)
+            s"Q numerator not strictly monotone: $traj")
+        case _ => ()
+      }
+      val nComm = lab.agg(countDistinct(col("community"))).head.getLong(0)
+      val selfLabeled = lab.filter(col("node") === col("community")).count()
+      if (selfLabeled != nComm)
+        throw new IllegalStateException(
+          s"$nComm communities but $selfLabeled self-labeled nodes — " +
+            "some label is not a member of its community")
+      checks("greedy_modularity_10m_rounds") = gmQnums.size.toLong
+      nComm
+    })
+    // k-truss peel at 10M edges — the last iterative structure operator
+    // without a ≥10M-edge measurement (r17 gap #1): k=5 (support ≥ 3)
+    // does a real cascading peel on the power-law core; rounds=30 is a
+    // generous cap whose unused tail is free (early exit at fixpoint).
+    // Check (untimed): (1) zero survivor edges under support k−2 — this
+    // certifies the peel CONVERGED (on a cap exit the trailing recompute
+    // would expose below-threshold survivors); (2) partition invariance
+    // of the support recompute: a fresh edgeSupports pass over the
+    // survivors at a different width must reproduce the published table
+    // bit-for-bit (the hits_5it check pattern). Recorded value =
+    // surviving edge count.
+    op("ktruss_k5")(Algorithms.kTruss(edges, k = 5, rounds = 30,
+      numParts = 32))({ df =>
+      val below = df.filter(col("support") < 3L).count()
+      if (below != 0)
+        throw new IllegalStateException(
+          s"$below survivor edges under support 3 — peel hit the cap unconverged")
+      val re = Algorithms.edgeSupports(df.select(col("a"), col("b")), numParts = 61)
+      val diff = df.except(re).count() + re.except(df).count()
+      if (diff > 0)
+        throw new IllegalStateException(
+          s"$diff support rows differ on an independent recompute")
+      df.count()
+    })
+    // full core decomposition (h-index fixpoint) at 10M edges — the
+    // other iterative operator r17 flagged as measured only at
+    // Wiki-Vote scale. Check (untimed): (1) FIXPOINT — one more
+    // h-index round over the published table must change nothing (the
+    // operator's own convergence probe, re-run from the outside
+    // against the published values); (2) cross-ALGORITHM level-set
+    // agreement: {v : coreness ≥ k} must equal the kCore(k) survivor
+    // node set for k ∈ {3, 5, 10} — the synchronous degree peel is a
+    // genuinely different algorithm (the Matula-Beck-twin move the
+    // gated instance uses, here distributed at 10M edges). Recorded
+    // value = Σ coreness.
+    op("coreness_10m")({
+      // the h-index tail can drag on power-law graphs (54 nodes were
+      // still moving at round 100 on the 1M-edge shakedown) — the cap
+      // is generous because its unused remainder is FREE (early exit
+      // on the sum probe); the rounds actually used are recorded
+      Algorithms.coreness(nodes, edges, maxRounds = 500, numParts = 32,
+        onRound = r => checks("coreness_10m_rounds") = r.toLong)
+    })({ df =>
+      val und = edges.select(col("src"), col("dst"))
+        .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+        .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
+      val pub = df.select(col("id").as("node"), col("coreness").as("c"))
+      val next = Algorithms.hIndexRound(und, pub)
+      val withEdges = pub.join(und.select(col("src").as("node")).distinct(), Seq("node"), "left_semi")
+      val changed = withEdges.join(next, Seq("node"))
+        .filter(withEdges("c") =!= next("c")).count()
+      if (changed != 0)
+        throw new IllegalStateException(
+          s"$changed nodes not at the h-index fixpoint — cap too low")
+      Seq(3, 5, 10).foreach { k =>
+        val peelSup = Algorithms.kCore(edges, k = k, rounds = 60)
+          .localCheckpoint()
+        // cap diagnosis BEFORE the comparison: a cap exit returns an
+        // unconverged superset (survivors still under degree k), which
+        // would otherwise surface as a misleading "nodes differ from
+        // the kCore peel" — name the actual failure instead
+        val under = peelSup.filter(col("deg") < k).count()
+        if (under != 0)
           throw new IllegalStateException(
-            s"$below survivor edges under support 3 — peel hit the cap unconverged")
-        val re = Algorithms.edgeSupports(df.select(col("a"), col("b")), numParts = 61)
-        val diff = df.except(re).count() + re.except(df).count()
+            s"kCore(k=$k) hit its 60-round cap unconverged " +
+              s"($under survivors under degree $k) — raise the cap")
+        val peel = peelSup.select(col("id"))
+        val level = df.filter(col("coreness") >= k).select(col("id"))
+        val diff = peel.except(level).count() + level.except(peel).count()
         if (diff > 0)
           throw new IllegalStateException(
-            s"$diff support rows differ on an independent recompute")
-        df.count()
-      }),
-      // full core decomposition (h-index fixpoint) at 10M edges — the
-      // other iterative operator r17 flagged as measured only at
-      // Wiki-Vote scale. Check (untimed): (1) FIXPOINT — one more
-      // h-index round over the published table must change nothing (the
-      // operator's own convergence probe, re-run from the outside
-      // against the published values); (2) cross-ALGORITHM level-set
-      // agreement: {v : coreness ≥ k} must equal the kCore(k) survivor
-      // node set for k ∈ {3, 5, 10} — the synchronous degree peel is a
-      // genuinely different algorithm (the Matula-Beck-twin move the
-      // gated instance uses, here distributed at 10M edges). Recorded
-      // value = Σ coreness.
-      op("coreness_10m")({
-        // the h-index tail can drag on power-law graphs (54 nodes were
-        // still moving at round 100 on the 1M-edge shakedown) — the cap
-        // is generous because its unused remainder is FREE (early exit
-        // on the sum probe); the rounds actually used are recorded
-        Algorithms.coreness(nodes, edges, maxRounds = 500, numParts = 32,
-          onRound = r => checks("coreness_10m_rounds") = r.toLong)
-      })({ df =>
-        val und = edges.select(col("src"), col("dst"))
-          .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-          .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
-        val pub = df.select(col("id").as("node"), col("coreness").as("c"))
-        val next = Algorithms.hIndexRound(und, pub)
-        val withEdges = pub.join(und.select(col("src").as("node")).distinct(), Seq("node"), "left_semi")
-        val changed = withEdges.join(next, Seq("node"))
-          .filter(withEdges("c") =!= next("c")).count()
-        if (changed != 0)
+            s"level set k=$k: $diff nodes differ from the kCore peel")
+      }
+      df.agg(sum(col("coreness"))).head.getLong(0)
+    })
+    // bridge detection at 10M edges — the last graph operator whose
+    // at-scale path was only parity-pinned (r18 gap #1): the
+    // distributed CC-roots + BFS-forest + XOR-cut-sketch route (the
+    // knob is off, so the local Tarjan cannot serve) over the power-law
+    // graph with the planted robustness fixtures. Check (untimed):
+    // every planted chain edge recovered (3000 known bridges), ZERO of
+    // the planted triangle edges reported (3000 known non-bridges —
+    // each closes a cycle), and the fail-loud BFS cap untripped
+    // (implicit: a cap trip errors the row). Recorded value = total
+    // reported bridge count (plants + the power-law graph's own
+    // pendant attachments).
+    op("bridges_10m")(Algorithms.bridges(
+      edges.union(plantedRobustnessEdges(spark, nNodes)),
+      maxRounds = 64, numParts = 32))({ df =>
+      val out = df.localCheckpoint()
+      val c = chainBase(nNodes)
+      val t = triBase(nNodes)
+      val chainEdges = spark.range(PlantN)
+        .selectExpr("id AS a", s"$c + 3*id AS b")
+        .union(spark.range(PlantN).selectExpr(s"$c + 3*id AS a", s"$c + 3*id + 1 AS b"))
+        .union(spark.range(PlantN).selectExpr(s"$c + 3*id + 1 AS a", s"$c + 3*id + 2 AS b"))
+      val missing = chainEdges.except(out).count()
+      if (missing != 0)
+        throw new IllegalStateException(
+          s"$missing of ${3 * PlantN} planted bridge edges not recovered")
+      val triEdges = spark.range(PlantN)
+        .selectExpr("id AS a", s"$t + 2*id AS b")
+        .union(spark.range(PlantN).selectExpr("id AS a", s"$t + 2*id + 1 AS b"))
+        .union(spark.range(PlantN).selectExpr(s"$t + 2*id AS a", s"$t + 2*id + 1 AS b"))
+      val fp = out.intersect(triEdges).count()
+      if (fp != 0)
+        throw new IllegalStateException(
+          s"$fp planted cycle edges falsely reported as bridges")
+      out.count()
+    })
+    // articulation points at 10M edges — the NODE analog measured on
+    // the same planted instance: the distributed Tarjan–Vishkin route
+    // (BFS forest + preorder intervals + block CC; the local DFS twin
+    // cannot serve with the knob off). Check (untimed): every planted
+    // cut vertex recovered (anchor + both interior chain nodes per
+    // chain), ZERO of the planted never-cut nodes reported (chain
+    // leaves, triangle corners). Recorded value = total cut-vertex
+    // count.
+    op("articulation_10m")(Algorithms.articulationPoints(
+      edges.union(plantedRobustnessEdges(spark, nNodes)),
+      maxRounds = 64, numParts = 32))({ df =>
+      val out = df.localCheckpoint()
+      val c = chainBase(nNodes)
+      val t = triBase(nNodes)
+      val mustArt = spark.range(PlantN).selectExpr("id")
+        .union(spark.range(PlantN).selectExpr(s"$c + 3*id AS id"))
+        .union(spark.range(PlantN).selectExpr(s"$c + 3*id + 1 AS id"))
+      val missing = mustArt.except(out).count()
+      if (missing != 0)
+        throw new IllegalStateException(
+          s"$missing of ${3 * PlantN} planted cut vertices not recovered")
+      val mustNot = spark.range(PlantN).selectExpr(s"$c + 3*id + 2 AS id")
+        .union(spark.range(PlantN).selectExpr(s"$t + 2*id AS id"))
+        .union(spark.range(PlantN).selectExpr(s"$t + 2*id + 1 AS id"))
+      val fp = out.intersect(mustNot).count()
+      if (fp != 0)
+        throw new IllegalStateException(
+          s"$fp planted never-cut nodes falsely reported")
+      out.count()
+    })
+    // label propagation at 10M edges — the last gated graph key whose
+    // distributed route had no measured run (r19 gap #1): 4 synchronous
+    // join+groupBy+window vote rounds over the power-law graph plus the
+    // planted clique chain (see plantedLpaEdges' closed form: in-clique
+    // majority beats the single bridge vote every round after the
+    // first). Check (untimed): every planted node labeled with its
+    // clique base — zero mislabels, exactly LpaPlantN distinct planted
+    // labels. Recorded value = distinct labels over the whole graph.
+    op("labelprop_10m")(Algorithms.labelPropagation(
+      nodes.union(spark.range(lpaBase(nNodes),
+        lpaBase(nNodes) + LpaClique * LpaPlantN).select(col("id"))),
+      edges.union(plantedLpaEdges(spark, nNodes)), rounds = 4))({ df =>
+      val out = df.localCheckpoint()
+      val base = lpaBase(nNodes)
+      val k = LpaClique
+      val planted = out.filter(col("node") >= base)
+      val bad = planted.filter(col("lbl") =!=
+        expr(s"$base + ((node - $base) DIV $k) * $k")).count()
+      if (bad != 0)
+        throw new IllegalStateException(
+          s"$bad of ${LpaClique * LpaPlantN} planted nodes mislabeled")
+      val nl = planted.agg(countDistinct(col("lbl"))).head.getLong(0)
+      if (nl != LpaPlantN)
+        throw new IllegalStateException(
+          s"planted distinct label count $nl != $LpaPlantN")
+      out.agg(countDistinct(col("lbl"))).head.getLong(0)
+    })
+    // pair shortest path at 10M edges — the bidirectional early-exit
+    // loop soaked (r19 gap #4; bfs_hub_d10 measures plain batched BFS
+    // only): hub-to-chain-leaf and hub-to-chain-midpoint pairs on the
+    // power-law graph plus the planted pendant chain. Both closed
+    // forms are EXACT: dist(0, s+i) = i+1 (the chain is the only
+    // path), and the meet round == ceil(d/2) (the onRound observer
+    // counts executed supersteps) — half the target depth must halve
+    // the superstep count, which IS the early-exit claim. The forward
+    // frontier floods the full 10M-edge graph every round, so the
+    // rounds are honest at-scale supersteps, not toy-chain walks.
+    op("ssp_pair_10m")({
+      val base = sspBase(nNodes)
+      val chainG = PropertyGraph(
+        nodes.union(spark.range(base, base + SspChainD).select(col("id"))),
+        edges.union(plantedSspEdges(spark, nNodes)))
+      val rFull = new AtomicInteger
+      val dFull = GraphXBridge.shortestPathLength(spark, chainG,
+        source = 0L, target = base + SspChainD - 1, numParts = 32,
+        onRound = _ => rFull.incrementAndGet())
+      val rHalf = new AtomicInteger
+      val dHalf = GraphXBridge.shortestPathLength(spark, chainG,
+        source = 0L, target = base + SspChainD / 2 - 1, numParts = 32,
+        onRound = _ => rHalf.incrementAndGet())
+      spark.createDataFrame(Seq(
+        ("full", dFull, rFull.get().toLong),
+        ("half", dHalf, rHalf.get().toLong)))
+        .toDF("pair", "dist", "supersteps")
+    })({ df =>
+      val rows = df.collect().map(r =>
+        r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      val d = SspChainD
+      if (rows("full") != ((d, (d + 1) / 2)))
+        throw new IllegalStateException(
+          s"full pair: got ${rows("full")}, want ($d, ${(d + 1) / 2})")
+      if (rows("half") != ((d / 2, (d / 2 + 1) / 2)))
+        throw new IllegalStateException(
+          s"half pair: got ${rows("half")}, want (${d / 2}, ${(d / 2 + 1) / 2})")
+      rows("full")._2 + rows("half")._2 // total supersteps = 30
+    })
+    // weighted greedy modularity at 10M edges with a NON-TRIVIAL weight
+    // distribution (w = 1 + xxhash64(src,dst) mod 8, W ≈ 4.5e7 — inside
+    // the 2^30 fail-loud bound): the r18 soak exercised the weighted
+    // core only at w ≡ 1 via the unweighted delegation identity; this
+    // row drives the strength-mass aggregations with real weight skew.
+    // onRound scores each merged round's partition with the exact
+    // integer weighted numerator; the check asserts Q is STRICTLY
+    // monotone from the singleton baseline (mutual-positive merges can
+    // only raise weighted Q) and that every community label is one of
+    // its members. Recorded value = final community count.
+    op("greedy_modularity_w_10m")({
+      val qn = scala.collection.mutable.ArrayBuffer.empty[Long]
+      gmwQnums = qn
+      Algorithms.greedyModularityWeighted(nodes, wEdges, rounds = 5,
+        onRound = (_, cm) => qn += Algorithms.modularityWeighted(wEdges, cm)
+          .agg(sum(col("q_num_4w2"))).head.getLong(0))
+    })({ df =>
+      val lab = df.localCheckpoint()
+      val q0 = Algorithms.modularityWeighted(wEdges,
+          nodes.select(col("id").as("node"), col("id").as("community")))
+        .agg(sum(col("q_num_4w2"))).head.getLong(0)
+      val traj = q0 +: gmwQnums.toSeq
+      traj.sliding(2).foreach {
+        case Seq(p, n) if n <= p =>
           throw new IllegalStateException(
-            s"$changed nodes not at the h-index fixpoint — cap too low")
-        Seq(3, 5, 10).foreach { k =>
-          val peelSup = Algorithms.kCore(edges, k = k, rounds = 60)
-            .localCheckpoint()
-          // cap diagnosis BEFORE the comparison: a cap exit returns an
-          // unconverged superset (survivors still under degree k), which
-          // would otherwise surface as a misleading "nodes differ from
-          // the kCore peel" — name the actual failure instead
-          val under = peelSup.filter(col("deg") < k).count()
-          if (under != 0)
-            throw new IllegalStateException(
-              s"kCore(k=$k) hit its 60-round cap unconverged " +
-                s"($under survivors under degree $k) — raise the cap")
-          val peel = peelSup.select(col("id"))
-          val level = df.filter(col("coreness") >= k).select(col("id"))
-          val diff = peel.except(level).count() + level.except(peel).count()
-          if (diff > 0)
-            throw new IllegalStateException(
-              s"level set k=$k: $diff nodes differ from the kCore peel")
-        }
-        df.agg(sum(col("coreness"))).head.getLong(0)
-      }),
-      // bridge detection at 10M edges — the last graph operator whose
-      // at-scale path was only parity-pinned (r18 gap #1): the
-      // distributed CC-roots + BFS-forest + XOR-cut-sketch route (the
-      // knob is off, so the local Tarjan cannot serve) over the power-law
-      // graph with the planted robustness fixtures. Check (untimed):
-      // every planted chain edge recovered (3000 known bridges), ZERO of
-      // the planted triangle edges reported (3000 known non-bridges —
-      // each closes a cycle), and the fail-loud BFS cap untripped
-      // (implicit: a cap trip errors the row). Recorded value = total
-      // reported bridge count (plants + the power-law graph's own
-      // pendant attachments).
-      op("bridges_10m")(Algorithms.bridges(
-        edges.union(plantedRobustnessEdges(spark, nNodes)),
-        maxRounds = 64, numParts = 32))({ df =>
-        val out = df.localCheckpoint()
-        val c = chainBase(nNodes)
-        val t = triBase(nNodes)
-        val chainEdges = spark.range(PlantN)
-          .selectExpr("id AS a", s"$c + 3*id AS b")
-          .union(spark.range(PlantN).selectExpr(s"$c + 3*id AS a", s"$c + 3*id + 1 AS b"))
-          .union(spark.range(PlantN).selectExpr(s"$c + 3*id + 1 AS a", s"$c + 3*id + 2 AS b"))
-        val missing = chainEdges.except(out).count()
-        if (missing != 0)
-          throw new IllegalStateException(
-            s"$missing of ${3 * PlantN} planted bridge edges not recovered")
-        val triEdges = spark.range(PlantN)
-          .selectExpr("id AS a", s"$t + 2*id AS b")
-          .union(spark.range(PlantN).selectExpr("id AS a", s"$t + 2*id + 1 AS b"))
-          .union(spark.range(PlantN).selectExpr(s"$t + 2*id AS a", s"$t + 2*id + 1 AS b"))
-        val fp = out.intersect(triEdges).count()
-        if (fp != 0)
-          throw new IllegalStateException(
-            s"$fp planted cycle edges falsely reported as bridges")
-        out.count()
-      }),
-      // articulation points at 10M edges — the NODE analog measured on
-      // the same planted instance: the distributed Tarjan–Vishkin route
-      // (BFS forest + preorder intervals + block CC; the local DFS twin
-      // cannot serve with the knob off). Check (untimed): every planted
-      // cut vertex recovered (anchor + both interior chain nodes per
-      // chain), ZERO of the planted never-cut nodes reported (chain
-      // leaves, triangle corners). Recorded value = total cut-vertex
-      // count.
-      op("articulation_10m")(Algorithms.articulationPoints(
-        edges.union(plantedRobustnessEdges(spark, nNodes)),
-        maxRounds = 64, numParts = 32))({ df =>
-        val out = df.localCheckpoint()
-        val c = chainBase(nNodes)
-        val t = triBase(nNodes)
-        val mustArt = spark.range(PlantN).selectExpr("id")
-          .union(spark.range(PlantN).selectExpr(s"$c + 3*id AS id"))
-          .union(spark.range(PlantN).selectExpr(s"$c + 3*id + 1 AS id"))
-        val missing = mustArt.except(out).count()
-        if (missing != 0)
-          throw new IllegalStateException(
-            s"$missing of ${3 * PlantN} planted cut vertices not recovered")
-        val mustNot = spark.range(PlantN).selectExpr(s"$c + 3*id + 2 AS id")
-          .union(spark.range(PlantN).selectExpr(s"$t + 2*id AS id"))
-          .union(spark.range(PlantN).selectExpr(s"$t + 2*id + 1 AS id"))
-        val fp = out.intersect(mustNot).count()
-        if (fp != 0)
-          throw new IllegalStateException(
-            s"$fp planted never-cut nodes falsely reported")
-        out.count()
-      }),
-      // label propagation at 10M edges — the last gated graph key whose
-      // distributed route had no measured run (r19 gap #1): 4 synchronous
-      // join+groupBy+window vote rounds over the power-law graph plus the
-      // planted clique chain (see plantedLpaEdges' closed form: in-clique
-      // majority beats the single bridge vote every round after the
-      // first). Check (untimed): every planted node labeled with its
-      // clique base — zero mislabels, exactly LpaPlantN distinct planted
-      // labels. Recorded value = distinct labels over the whole graph.
-      op("labelprop_10m")(Algorithms.labelPropagation(
-        nodes.union(spark.range(lpaBase(nNodes),
-          lpaBase(nNodes) + LpaClique * LpaPlantN).select(col("id"))),
-        edges.union(plantedLpaEdges(spark, nNodes)), rounds = 4))({ df =>
-        val out = df.localCheckpoint()
-        val base = lpaBase(nNodes)
-        val k = LpaClique
-        val planted = out.filter(col("node") >= base)
-        val bad = planted.filter(col("lbl") =!=
-          expr(s"$base + ((node - $base) DIV $k) * $k")).count()
-        if (bad != 0)
-          throw new IllegalStateException(
-            s"$bad of ${LpaClique * LpaPlantN} planted nodes mislabeled")
-        val nl = planted.agg(countDistinct(col("lbl"))).head.getLong(0)
-        if (nl != LpaPlantN)
-          throw new IllegalStateException(
-            s"planted distinct label count $nl != $LpaPlantN")
-        out.agg(countDistinct(col("lbl"))).head.getLong(0)
-      }),
-      // pair shortest path at 10M edges — the bidirectional early-exit
-      // loop soaked (r19 gap #4; bfs_hub_d10 measures plain batched BFS
-      // only): hub-to-chain-leaf and hub-to-chain-midpoint pairs on the
-      // power-law graph plus the planted pendant chain. Both closed
-      // forms are EXACT: dist(0, s+i) = i+1 (the chain is the only
-      // path), and the meet round == ceil(d/2) (the onRound observer
-      // counts executed supersteps) — half the target depth must halve
-      // the superstep count, which IS the early-exit claim. The forward
-      // frontier floods the full 10M-edge graph every round, so the
-      // rounds are honest at-scale supersteps, not toy-chain walks.
-      op("ssp_pair_10m")({
-        val base = sspBase(nNodes)
-        val chainG = PropertyGraph(
-          nodes.union(spark.range(base, base + SspChainD).select(col("id"))),
-          edges.union(plantedSspEdges(spark, nNodes)))
-        val rFull = new AtomicInteger
-        val dFull = GraphXBridge.shortestPathLength(spark, chainG,
-          source = 0L, target = base + SspChainD - 1, numParts = 32,
-          onRound = _ => rFull.incrementAndGet())
-        val rHalf = new AtomicInteger
-        val dHalf = GraphXBridge.shortestPathLength(spark, chainG,
-          source = 0L, target = base + SspChainD / 2 - 1, numParts = 32,
-          onRound = _ => rHalf.incrementAndGet())
-        spark.createDataFrame(Seq(
-          ("full", dFull, rFull.get().toLong),
-          ("half", dHalf, rHalf.get().toLong)))
-          .toDF("pair", "dist", "supersteps")
-      })({ df =>
-        val rows = df.collect().map(r =>
-          r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-        val d = SspChainD
-        if (rows("full") != ((d, (d + 1) / 2)))
-          throw new IllegalStateException(
-            s"full pair: got ${rows("full")}, want ($d, ${(d + 1) / 2})")
-        if (rows("half") != ((d / 2, (d / 2 + 1) / 2)))
-          throw new IllegalStateException(
-            s"half pair: got ${rows("half")}, want (${d / 2}, ${(d / 2 + 1) / 2})")
-        rows("full")._2 + rows("half")._2 // total supersteps = 30
-      }),
-      // weighted greedy modularity at 10M edges with a NON-TRIVIAL weight
-      // distribution (w = 1 + xxhash64(src,dst) mod 8, W ≈ 4.5e7 — inside
-      // the 2^30 fail-loud bound): the r18 soak exercised the weighted
-      // core only at w ≡ 1 via the unweighted delegation identity; this
-      // row drives the strength-mass aggregations with real weight skew.
-      // onRound scores each merged round's partition with the exact
-      // integer weighted numerator; the check asserts Q is STRICTLY
-      // monotone from the singleton baseline (mutual-positive merges can
-      // only raise weighted Q) and that every community label is one of
-      // its members. Recorded value = final community count.
-      op("greedy_modularity_w_10m")({
-        val qn = scala.collection.mutable.ArrayBuffer.empty[Long]
-        gmwQnums = qn
-        Algorithms.greedyModularityWeighted(nodes, wEdges, rounds = 5,
-          onRound = (_, cm) => qn += Algorithms.modularityWeighted(wEdges, cm)
-            .agg(sum(col("q_num_4w2"))).head.getLong(0))
-      })({ df =>
-        val lab = df.localCheckpoint()
-        val q0 = Algorithms.modularityWeighted(wEdges,
-            nodes.select(col("id").as("node"), col("id").as("community")))
-          .agg(sum(col("q_num_4w2"))).head.getLong(0)
-        val traj = q0 +: gmwQnums.toSeq
-        traj.sliding(2).foreach {
-          case Seq(p, n) if n <= p =>
-            throw new IllegalStateException(
-              s"weighted Q numerator not strictly monotone: $traj")
-          case _ => ()
-        }
-        val nComm = lab.agg(countDistinct(col("community"))).head.getLong(0)
-        val selfLabeled = lab.filter(col("node") === col("community")).count()
-        if (selfLabeled != nComm)
-          throw new IllegalStateException(
-            s"$nComm communities but $selfLabeled self-labeled nodes — " +
-              "some label is not a member of its community")
-        checks("greedy_modularity_w_10m_rounds") = gmwQnums.size.toLong
-        nComm
-      }),
-      // distributed personalized PageRank seeded at the hub (the DataFrame
-      // loop — the knob is off, so the local twin cannot serve): mass in
-      // ppm, a stable integer under the per-iteration snap
-      op("ppr_hub_10it")(Algorithms.personalizedPageRank(
-        nodes, edges, source = 0L, iters = 10))(
-        df => (df.agg(sum(col("rank"))).head.getDouble(0) * 1e6).toLong),
-      // HITS on the power-law digraph — the exact-integer protocol at
-      // 10M edges (fp = 2^20: raw·fp < 2^63 holds to max-degree ~8M,
-      // the docstring's degree-scale knob). Check = PARTITION
-      // INVARIANCE, the at-scale form of the bit-exactness claim: a
-      // second run on a different partitioning must produce the
-      // IDENTICAL score table (symmetric except-count 0, verified
-      // distributed — no driver copy of the 1M-row result). Recorded
-      // value = nodes holding both roles (hub AND auth > 0).
-      op("hits_5it")(Algorithms.hits(nodes, edges, iters = 5, fp = 1L << 20))({ df =>
-        val a = df.localCheckpoint()
-        val b = Algorithms.hits(nodes, edges, iters = 5, numParts = 61,
-          fp = 1L << 20)
-        val diff = a.except(b).count() + b.except(a).count()
-        if (diff > 0)
-          throw new IllegalStateException(
-            s"$diff score rows differ across partitionings")
-        a.filter(col("hub_fp") > 0 && col("auth_fp") > 0).count()
-      }),
-      // distributed walk sampling: adjacency via one shuffle, then
-      // per-step frontier joins — 1/1000 of nodes seeded, 4 steps; check
-      // = visited-step rows (walks stop at sinks, so < 5x seeds)
-      // distributed SCC (the DataFrame trim+coloring loop — replaced the
-      // GraphX coloring row in r15: same labels, same 2-outer-round
-      // behavior on this depth-1 condensation, delta-frontier execution
-      // instead of full-graph Pregel supersteps; the GraphX twin's
-      // 577-777 s walls are on record in the r13/r14 GRAPH_SCALE lines)
-      // on the planted-SCC digraph: every label must equal its block
-      // base (the closed form), and the recorded check = SCC count =
-      // nNodes/SccBlock.
-      op("scc_planted")({
-        val sccEdges = plantedSccEdges(spark, nEdges, nNodes).localCheckpoint()
-        Algorithms.scc(nodes, sccEdges)
-      })({ df =>
-        val lab = df.select(col("node"), col("comp")).localCheckpoint()
-        val bad = lab
-          .filter(expr(s"comp <> (node DIV $SccBlock) * $SccBlock")).count()
-        if (bad > 0)
-          throw new IllegalStateException(s"$bad nodes off the planted SCC labels")
-        lab.agg(countDistinct(col("comp"))).head.getLong(0)
-      }),
-      op("walks_4step")({
-        val adj = edges.groupBy(col("src"))
-          .agg(sort_array(collect_list(col("dst"))).as("nbrs")).localCheckpoint()
-        var frontier = adj.filter(col("src") % 1000 === 0)
-          .select(col("src").as("start"), col("src").as("node"))
-        var out = frontier.select(col("start"), lit(0).as("step"), col("node"))
-        for (t <- 1 to 4) {
-          // per-step checkpoint — the union's branches must not re-run
-          // the whole join chain (O(S²/2) joins; see GraphOps.randomWalks)
-          frontier = frontier.join(adj, col("node") === col("src"))
-            .select(col("start"), element_at(col("nbrs"),
-              (expr(s"CAST(conv(substring(md5(concat(CAST(start AS STRING), '_', CAST($t AS STRING), '_', CAST(node AS STRING))), 1, 8), 16, 10) AS BIGINT)")
-                % size(col("nbrs"))).cast("int") + 1).as("node"))
-            .localCheckpoint()
-          out = out.unionByName(frontier.select(col("start"), lit(t).as("step"), col("node")))
-        }
-        out
-      })(_.count()))
+            s"weighted Q numerator not strictly monotone: $traj")
+        case _ => ()
+      }
+      val nComm = lab.agg(countDistinct(col("community"))).head.getLong(0)
+      val selfLabeled = lab.filter(col("node") === col("community")).count()
+      if (selfLabeled != nComm)
+        throw new IllegalStateException(
+          s"$nComm communities but $selfLabeled self-labeled nodes — " +
+            "some label is not a member of its community")
+      checks("greedy_modularity_w_10m_rounds") = gmwQnums.size.toLong
+      nComm
+    })
+    // distributed personalized PageRank seeded at the hub (the DataFrame
+    // loop — the knob is off, so the local twin cannot serve): mass in
+    // ppm, a stable integer under the per-iteration snap
+    op("ppr_hub_10it")(Algorithms.personalizedPageRank(
+      nodes, edges, source = 0L, iters = 10))(
+      df => (df.agg(sum(col("rank"))).head.getDouble(0) * 1e6).toLong)
+    // HITS on the power-law digraph — the exact-integer protocol at
+    // 10M edges (fp = 2^20: raw·fp < 2^63 holds to max-degree ~8M,
+    // the docstring's degree-scale knob). Check = PARTITION
+    // INVARIANCE, the at-scale form of the bit-exactness claim: a
+    // second run on a different partitioning must produce the
+    // IDENTICAL score table (symmetric except-count 0, verified
+    // distributed — no driver copy of the 1M-row result). Recorded
+    // value = nodes holding both roles (hub AND auth > 0).
+    op("hits_5it")(Algorithms.hits(nodes, edges, iters = 5, fp = 1L << 20))({ df =>
+      val a = df.localCheckpoint()
+      val b = Algorithms.hits(nodes, edges, iters = 5, numParts = 61,
+        fp = 1L << 20)
+      val diff = a.except(b).count() + b.except(a).count()
+      if (diff > 0)
+        throw new IllegalStateException(
+          s"$diff score rows differ across partitionings")
+      a.filter(col("hub_fp") > 0 && col("auth_fp") > 0).count()
+    })
+    // distributed walk sampling: adjacency via one shuffle, then
+    // per-step frontier joins — 1/1000 of nodes seeded, 4 steps; check
+    // = visited-step rows (walks stop at sinks, so < 5x seeds)
+    // distributed SCC (the DataFrame trim+coloring loop — replaced the
+    // GraphX coloring row in r15: same labels, same 2-outer-round
+    // behavior on this depth-1 condensation, delta-frontier execution
+    // instead of full-graph Pregel supersteps; the GraphX twin's
+    // 577-777 s walls are on record in the r13/r14 GRAPH_SCALE lines)
+    // on the planted-SCC digraph: every label must equal its block
+    // base (the closed form), and the recorded check = SCC count =
+    // nNodes/SccBlock.
+    op("scc_planted")({
+      val sccEdges = plantedSccEdges(spark, nEdges, nNodes).localCheckpoint()
+      Algorithms.scc(nodes, sccEdges)
+    })({ df =>
+      val lab = df.select(col("node"), col("comp")).localCheckpoint()
+      val bad = lab
+        .filter(expr(s"comp <> (node DIV $SccBlock) * $SccBlock")).count()
+      if (bad > 0)
+        throw new IllegalStateException(s"$bad nodes off the planted SCC labels")
+      lab.agg(countDistinct(col("comp"))).head.getLong(0)
+    })
+    op("walks_4step")({
+      val adj = edges.groupBy(col("src"))
+        .agg(sort_array(collect_list(col("dst"))).as("nbrs")).localCheckpoint()
+      var frontier = adj.filter(col("src") % 1000 === 0)
+        .select(col("src").as("start"), col("src").as("node"))
+      var out = frontier.select(col("start"), lit(0).as("step"), col("node"))
+      for (t <- 1 to 4) {
+        // per-step checkpoint — the union's branches must not re-run
+        // the whole join chain (O(S²/2) joins; see GraphOps.randomWalks)
+        frontier = frontier.join(adj, col("node") === col("src"))
+          .select(col("start"), element_at(col("nbrs"),
+            (expr(s"CAST(conv(substring(md5(concat(CAST(start AS STRING), '_', CAST($t AS STRING), '_', CAST(node AS STRING))), 1, 8), 16, 10) AS BIGINT)")
+              % size(col("nbrs"))).cast("int") + 1).as("node"))
+          .localCheckpoint()
+        out = out.unionByName(frontier.select(col("start"), lit(t).as("step"), col("node")))
+      }
+      out
+    })(_.count())
 
-    val ran = results.filterNot(_._4.contains("skipped (op filter)"))
-    val ok = ran.filter(_._4.isEmpty)
-    def obj(f: ((String, Double, Int, Option[String])) => String): String =
-      ok.map(f).mkString("{", ",", "}")
-    // a filtered (iteration-aid) run must be self-describing: without the
-    // marker a committed filtered line would be indistinguishable in
-    // shape from a real unfiltered soak (same keys-object schema)
-    val filteredPart = if (only.isEmpty) ""
-      else s""""filtered":true,"only":"${only.toSeq.sorted.mkString(",")}","""
-    val line =
-      s"""{"metric":"graph_scale",$filteredPart"value":${Bench.jsonNum(ok.map(_._2).sum)},""" +
-      s""""unit":"sec","n_nodes":$nNodes,"n_edges":$edgeCount,""" +
-      s""""queries":${obj(r => s"\"${r._1}\":${Bench.jsonNum(r._2)}")},""" +
-      s""""jobs":${obj(r => s"\"${r._1}\":${r._3}")},""" +
-      s""""check_secs":${checkSecs.map { case (k, v) => s"\"$k\":${Bench.jsonNum(v)}" }.mkString("{", ",", "}")},""" +
-      s""""checks":${checks.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")},""" +
-      s""""errors":${ran.collect { case (k, _, _, Some(e)) => s"\"$k\":\"$e\"" }.mkString("{", ",", "}")}}"""
-    println(line)
-    spark.stop()
-    // same rc contract as Bench: 0 = every op measured, 1 = at least
-    // one op errored (details in the line's "errors" object) — wrappers
-    // keying off the exit code see the failure without parsing JSON
-    if (ran.exists(_._4.isDefined)) sys.exit(1)
+    soak.finish("n_nodes" -> nNodes, "n_edges" -> edgeCount)
   }
 }

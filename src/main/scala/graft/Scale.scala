@@ -12,8 +12,10 @@ import org.apache.spark.sql.functions._
   * state-unbounded behavior is unmissable.
   *
   * Usage: runMain graft.Scale [nDocs]   (default 500000 ≈ 100× sf0.1)
-  * Prints one JSON line: {"metric":"scale_total","n_docs":N,
-  *   "queries":{name:sec,...},"errors":{...}}
+  * Prints one [[Soak]] line: {"metric":"scale_total","n_docs":N,
+  *   "queries":{name:sec,...},"jobs":{...},"check_secs":{...},
+  *   "checks":{name:rows,...},"errors":{...}}; exit code 1 if any query
+  *   errored.
   *
   * Timing caveat: single pass, no warmup (this is a soak, not a
   * benchmark — Bench owns steady-state numbers), so the first query of
@@ -32,10 +34,11 @@ import org.apache.spark.sql.functions._
   */
 object Scale {
 
-  /** Queries runnable from the documents table alone (d_embed_neardup is
-    * doc-prefixed but reads the embeddings table — excluded). */
+  /** Queries runnable from the documents table alone (d_embed_neardup and
+    * d_semantic_neardup are doc-prefixed but read the embeddings table —
+    * excluded). */
   private val DocPrefixes = Seq("d_", "t_", "m_", "c_")
-  private val Excluded = Set("d_embed_neardup")
+  private val Excluded = Set("d_embed_neardup", "d_semantic_neardup")
 
   def synthesize(spark: SparkSession, n: Long, outDir: String): Unit = {
     // vocabulary must be PURELY alphabetic: the text operators tokenize
@@ -64,41 +67,15 @@ object Scale {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(500000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val dir = s"/tmp/${Reset.ScratchPrefix}scale"
     synthesize(spark, n, dir)
-    val docQueries = SparkEntry.queries.filter { case (name, _) =>
+    val soak = new Soak(spark, "scale_total")
+    SparkEntry.queries.filter { case (name, _) =>
       DocPrefixes.exists(name.startsWith) && !Excluded(name)
-    }.toSeq.sortBy(_._1)
-    val results = docQueries.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val err = try {
-        fn(spark, dir).write.mode("overwrite").format("noop").save()
-        None
-      } catch {
-        case t: Throwable =>
-          Some(Option(t.getMessage).getOrElse(t.getClass.getName)
-            .replaceAll("[\\x00-\\x1f\"\\\\,]", " ").take(200))
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
-      Reset.clear(spark)
-      (name, secs, err)
+    }.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      soak.op(name)(fn(spark, dir))(_.count())
     }
-    val ok = results.filter(_._3.isEmpty)
-    val qs = ok.map { case (k, v, _) => s"\"$k\":${Bench.jsonNum(v)}" }
-      .mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, Some(e)) => s"\"$k\":\"$e\"" }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"scale_total","value":${Bench.jsonNum(ok.map(_._2).sum)},""" +
-      s""""unit":"sec","n_docs":$n,"queries":$qs,"errors":$errs}""")
-    Reset.clear(spark, scratch = true)
-    spark.stop()
+    soak.finish("n_docs" -> n)
   }
 }

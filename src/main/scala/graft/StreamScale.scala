@@ -41,10 +41,11 @@ import graft.streaming.{DocStreams, InsertBench}
   * Usage: runMain graft.StreamScale [gateRowsPerBatch] [gateBatches]
   *   (defaults 250000 × 12 — 3M docs through the gate; the S8 probe runs
   *   at gateRowsPerBatch/2 × gateBatches)
-  * Prints one JSON line:
+  * Prints one [[Soak]] line:
   *   {"metric":"stream_scale","value":SECS,"unit":"sec",
   *    "queries":{op:sec,...},"docs_per_sec":{op:rate,...},
-  *    "rows":{op:n,...},"checks":{...},"errors":{...}}
+  *    "rows":{op:n,...},"check_secs":{},"checks":{...},"errors":{...}};
+  *   exit code 1 if any probe errored.
   */
 object StreamScale {
 
@@ -92,33 +93,24 @@ object StreamScale {
     val gateBatches = args.lift(1).map(_.toInt).getOrElse(12)
     val hhRows = math.max(1L, gateRows / 2)
     val m = 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
+    val parts = spark.sparkContext.defaultParallelism
+    val soak = new Soak(spark, "stream_scale")
+    import soak.checks
 
-    val checks = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val results = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Double, Double, Long, Option[String])]
-
+    // (rows, rate) probes: timed whole, published with their own columns
     def probe(name: String)(body: => (Long, Double)): Unit = {
       val t0 = System.nanoTime()
-      val r = try { val (rows, rate) = body; (rate, rows, None: Option[String]) }
-      catch {
-        case t: Throwable => (0.0, 0L,
-          Some(Option(t.getMessage).getOrElse(t.getClass.getName)
-            .replaceAll("[\\x00-\\x1f\"\\\\,]", " ").take(200)))
-      }
-      results += ((name, (System.nanoTime() - t0) / 1e9, r._1, r._2, r._3))
+      try {
+        val (rows, rate) = body
+        soak.record(name, (System.nanoTime() - t0) / 1e9, None,
+          "docs_per_sec" -> Bench.jsonNum(rate), "rows" -> rows.toString)
+      } catch { case t: Throwable => soak.record(name, 0.0, Some(Soak.sanitize(t))) }
     }
 
     // --- S6 gate: stateless curation pipeline at full rate ------------------
     probe("s6_gate") {
-      val docs = rateDocs(spark, gateRows, cpus.toInt)
+      val docs = rateDocs(spark, gateRows, parts)
         .select(InsertBench.docExpr: _*)
       val q = DocStreams.ingestGate(docs).writeStream
         .format("noop")
@@ -141,7 +133,7 @@ object StreamScale {
 
     // --- S8 heavy hitters: bounded state under vocabulary churn -------------
     probe("s8_heavy_hitters") {
-      val docs = rateDocs(spark, hhRows, cpus.toInt).selectExpr(
+      val docs = rateDocs(spark, hhRows, parts).selectExpr(
         "value AS doc_id",
         // one fresh letter-only token per 20 ids — the vocabulary grows
         // without bound while the MG state may not
@@ -177,21 +169,7 @@ object StreamScale {
       (rows, rate)
     }
 
-    val ok = results.filter(_._5.isEmpty)
-    def obj(f: ((String, Double, Double, Long, Option[String])) => String): String =
-      ok.map(f).mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"stream_scale","value":${Bench.jsonNum(ok.map(_._2).sum)},""" +
-      s""""unit":"sec","gate_rows_per_batch":$gateRows,"hh_rows_per_batch":$hhRows,""" +
-      s""""mg_capacity":$m,""" +
-      s""""queries":${obj(r => s"\"${r._1}\":${Bench.jsonNum(r._2)}")},""" +
-      s""""docs_per_sec":${obj(r => s"\"${r._1}\":${Bench.jsonNum(r._3)}")},""" +
-      s""""rows":${obj(r => s"\"${r._1}\":${r._4}")},""" +
-      s""""checks":${checks.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")},""" +
-      s""""errors":${results.collect { case (k, _, _, _, Some(e)) => s"\"$k\":\"$e\"" }.mkString("{", ",", "}")}}"""
-    println(line)
-    Reset.clear(spark, scratch = true)
-    spark.stop()
-    if (results.exists(_._5.isDefined)) sys.exit(1)
+    soak.finish("gate_rows_per_batch" -> gateRows, "hh_rows_per_batch" -> hhRows,
+      "mg_capacity" -> m.toLong)
   }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end streaming drive: replays the events parquet as a file stream
@@ -9,14 +8,8 @@ import org.apache.spark.sql.functions._
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     // the file-stream source requires a directory: stage the single
     // events.parquet file into one, inside the per-JVM scratch namespace

@@ -1099,6 +1099,26 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("kCore: the distributed peel leaves no set-probe function registered") {
+    val prefix = "graft_kcore_dropped_"
+    def probes(): Seq[String] = spark.catalog.listFunctions().collect().toSeq
+      .map(_.name).filter(_.startsWith(prefix))
+    // the listing sees a registered probe, and dropProbe removes it
+    val bc = spark.sparkContext.broadcast(Array(1L))
+    graft.functions.GraftFunctions.registerSetProbe(spark, s"${prefix}sanity", bc)
+    assert(probes() == Seq(s"${prefix}sanity") && spark.catalog.functionExists(s"${prefix}sanity"))
+    graft.functions.GraftFunctions.dropProbe(spark, s"${prefix}sanity")
+    assert(!spark.catalog.functionExists(s"${prefix}sanity"))
+    // triangle-with-tail at k = 2: rounds 1 and 2 each drop one tail node,
+    // a set small enough for the broadcast set-probe filter
+    val g = graph(Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L)))
+    val got = withLocalExecOff(Algorithms.kCore(g.edges, k = 2, rounds = 5))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(got == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
+    val left = probes()
+    assert(left.isEmpty, s"set-probe functions left registered: $left")
+  }
+
   test("kCore: heavy-round semi-join fallback equals the broadcast trickle path") {
     withLocalExecOff {
       // dropBroadcastMax=0 forces EVERY round down the shuffle semi-join

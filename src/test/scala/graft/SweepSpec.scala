@@ -47,24 +47,15 @@ class SweepSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (one-plus per superstep — ~30 levels on the sf0.001 grid), far past
     // LocalExecJobsSpec's ≤6-job bound for the local route; count jobs to
     // prove @dist actually left the local path
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      org.apache.spark.graft.ListenerBarrier.waitUntilEmpty(spark.sparkContext)
-      jobs.set(0)
+    val jobs = JobCount(spark) {
       GraphOps.sweepQueries("g_sssp_grid@dist")(spark, dir).collect()
-      org.apache.spark.graft.ListenerBarrier.waitUntilEmpty(spark.sparkContext)
-      assert(jobs.get() > 6,
-        s"g_sssp_grid@dist scheduled only ${jobs.get()} jobs — still on the local path?")
-      // and the conf round-trips: the overlay must not leave the kill
-      // switch set for subsequent queries
-      assert(spark.conf.getOption(graft.graph.LocalExec.MaxBytesKey).isEmpty,
-        "@dist overlay leaked graft.localexec.maxBytes=0 into the session")
-    } finally spark.sparkContext.removeSparkListener(l)
+    }
+    assert(jobs > 6,
+      s"g_sssp_grid@dist scheduled only $jobs jobs — still on the local path?")
+    // and the conf round-trips: the overlay must not leave the kill
+    // switch set for subsequent queries
+    assert(spark.conf.getOption(graft.graph.LocalExec.MaxBytesKey).isEmpty,
+      "@dist overlay leaked graft.localexec.maxBytes=0 into the session")
   }
 
   test("hops axis: reached-node counts grow monotonically with maxHops") {
@@ -362,26 +353,13 @@ class SweepSpec extends AnyFunSuite with BeforeAndAfterAll {
     // probe count schedules NO additional Spark jobs — per-op cost is a
     // driver memory probe, so the per-query floor is the whole job cost
     // at any n. (Cold passes above already warmed the store.)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    def jobsFor(n: Int): Int = JobCount(spark) {
+      GraphOps.sweepQueries(s"g_node_lookup_fast@n$n")(spark, dir).collect()
     }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      def jobsFor(n: Int): Int = {
-        org.apache.spark.graft.ListenerBarrier.waitUntilEmpty(spark.sparkContext)
-        jobs.set(0)
-        GraphOps.sweepQueries(s"g_node_lookup_fast@n$n")(spark, dir).collect()
-        org.apache.spark.graft.ListenerBarrier.waitUntilEmpty(spark.sparkContext)
-        jobs.get()
-      }
-      val j100 = jobsFor(100)
-      val j1000 = jobsFor(1000)
-      assert(j1000 <= j100,
-        s"warm lookups must not scale jobs with probe count ($j100 → $j1000)")
-    } finally spark.sparkContext.removeSparkListener(l)
+    val j100 = jobsFor(100)
+    val j1000 = jobsFor(1000)
+    assert(j1000 <= j100,
+      s"warm lookups must not scale jobs with probe count ($j100 → $j1000)")
   }
 
   test("@warm axis: repeated probes stay warm (zero jobs) and the per-op ceiling holds") {
@@ -389,24 +367,14 @@ class SweepSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = GraphOps.sweepQueries("g_node_lookup_fast@warm32")(spark, dir).collect()
     assert(rows.length === 1 && rows.head.getLong(0) === 42L)
     // all-warm builds schedule NO jobs (the probe is a driver memory hit)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    val perOpMs = try {
-      org.apache.spark.graft.ListenerBarrier.waitUntilEmpty(spark.sparkContext)
-      jobs.set(0)
+    var perOpMs = 0.0
+    val jobs = JobCount(spark) {
       val t0 = System.nanoTime()
       GraphOps.sweepQueries("g_node_lookup_fast@warm128")(spark, dir)
-      val ms = (System.nanoTime() - t0) / 1e6 / 128
-      org.apache.spark.graft.ListenerBarrier.waitUntilEmpty(spark.sparkContext)
-      assert(jobs.get() === 0,
-        s"warm probe builds scheduled ${jobs.get()} jobs — warm-store miss")
-      ms
-    } finally spark.sparkContext.removeSparkListener(l)
+      perOpMs = (System.nanoTime() - t0) / 1e6 / 128
+    }
+    assert(jobs === 0,
+      s"warm probe builds scheduled $jobs jobs — warm-store miss")
     // ceiling: generous 5 ms/op — the reference's iterated get_single_node
     // runs 3.4 ms/op; the warm probe is typically well under 1 ms
     assert(perOpMs <= 5.0, f"warm per-op $perOpMs%.2f ms exceeds the 5 ms bar")

@@ -61,11 +61,14 @@ object StreamScale {
     }
   }
 
-  /** (total input rows, steady-state docs/s, total sink output rows) from
-    * the engine's own progress records; the first two data batches are
-    * warm-up (planning + codegen) and excluded from the rate. */
-  private def throughput(ps: Seq[StreamingQueryProgress]): (Long, Double, Long) = {
-    val data = ps.filter(_.numInputRows > 0)
+  /** (total input rows, steady-state docs/s, total sink output rows) over
+    * the first `n` data batches, from the engine's own progress records;
+    * the first two are warm-up (planning + codegen) and excluded from the
+    * rate. [[awaitBatches]] returns after AT LEAST `n` batches and the
+    * source may finish one more before the query stops, so only the
+    * first `n` make a total that is the same on every run. */
+  private def throughput(ps: Seq[StreamingQueryProgress], n: Int): (Long, Double, Long) = {
+    val data = ps.filter(_.numInputRows > 0).take(n)
     val steady = if (data.length > 2) data.drop(2) else data
     val secs = steady.map(_.durationMs.get("triggerExecution").toDouble).sum / 1000.0
     val rate = if (secs > 0) steady.map(_.numInputRows).sum / secs else 0.0
@@ -118,7 +121,7 @@ object StreamScale {
         .trigger(Trigger.ProcessingTime("0 seconds"))
         .start()
       try awaitBatches(q, gateBatches, timeoutMs = 300000) finally q.stop()
-      val (rows, rate, admitted) = throughput(q.recentProgress.toSeq)
+      val (rows, rate, admitted) = throughput(q.recentProgress.toSeq, gateBatches)
       // lambda agreement at scale: the batch pipeline over the same ids
       // must admit EXACTLY the rows the stream's sink saw
       val expected = DocStreams.ingestGate(
@@ -153,7 +156,7 @@ object StreamScale {
         .trigger(Trigger.ProcessingTime("0 seconds"))
         .start()
       try awaitBatches(q, gateBatches, timeoutMs = 300000) finally q.stop()
-      val (rows, rate, _) = throughput(q.recentProgress.toSeq)
+      val (rows, rate, _) = throughput(q.recentProgress.toSeq, gateBatches)
       val lastState = q.recentProgress.reverse
         .find(_.stateOperators.nonEmpty).map(_.stateOperators.head)
       checks("s8_distinct_tokens_seen") = rows / 20 // the churn plant's floor

@@ -3,6 +3,7 @@ package graft.graph
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
@@ -173,17 +174,18 @@ object LocalExec {
   private val TagIds = -2L
   private val TagRows = -3L
   private val TagWeighted = -4L
+  private val TagScan = -5L
 
-  /** The one collect of a relation's prepared projection: a warm entry if
-    * there is one, else one job (whole, or a limit probe), stored only
-    * when it fits the bound. Over-bound outcomes are NOT stored — the
-    * relation cannot shrink mid-window, so a miss stays a miss. */
-  private def collected[T <: AnyRef](prepared: DataFrame, tag: Long, a: Admit)
-                                   (build: Array[Row] => T)(size: T => Int): Option[T] = {
-    val key = (prepared.queryExecution.optimizedPlan.canonicalized, tag)
+  /** The one collect of an optimized plan: a warm entry if there is one,
+    * else `fetch` (one job), stored only when it fits the bound. Over-bound
+    * outcomes are NOT stored — the relation cannot shrink mid-window, so a
+    * miss stays a miss. */
+  private def stored[R, T <: AnyRef](plan: LogicalPlan, tag: Long, a: Admit)(fetch: => Array[R])
+                                    (build: Array[R] => T)(size: T => Int): Option[T] = {
+    val key = (plan.canonicalized, tag)
     val v = warm.get(key) match {
       case null =>
-        val rows = if (a.probe) prepared.limit(a.bound + 1).collect() else prepared.collect()
+        val rows = fetch
         if (rows.length > a.bound) return None
         val t = build(rows)
         Option(warm.putIfAbsent(key, t)).getOrElse(t).asInstanceOf[T]
@@ -191,6 +193,17 @@ object LocalExec {
     }
     if (size(v) > a.bound) None else Some(v)
   }
+
+  /** [[stored]] for a relation's prepared projection: whole, or through a
+    * limit probe. */
+  private def collected[T <: AnyRef](prepared: DataFrame, tag: Long, a: Admit)
+                                   (build: Array[Row] => T)(size: T => Int): Option[T] =
+    stored(prepared.queryExecution.optimizedPlan, tag, a)(
+      if (a.probe) prepared.limit(a.bound + 1).collect() else prepared.collect())(build)(size)
+
+  /** Admission by plan statistics alone: the budget, then [[RowCap]]. */
+  private def admitByStats(spark: SparkSession, plan: LogicalPlan): Option[Admit] =
+    admit(spark, 0)(plan.stats.sizeInBytes <= BigInt(budget(spark)))
 
   /** The edge relation's one collected [[Graph]]. Null endpoints are
     * dropped BEFORE collecting — an equi-join never matches a null key,
@@ -234,17 +247,21 @@ object LocalExec {
     * the optimizer's size estimate for `df` fits the LocalExec budget,
     * collect it once per warm window and serve repeat lookups from the
     * driver copy (the "property index held in store memory" analog);
-    * `None` when over budget or local execution is disabled — the caller
-    * runs its pruned-scan / distributed formulation unchanged. */
-  def warmRows(df: DataFrame): Option[Array[Row]] = {
-    val spark = df.sparkSession
-    val b = budget(spark)
-    if (b <= 0) return None
-    val plan = df.queryExecution.optimizedPlan
-    if (plan.stats.sizeInBytes > BigInt(b)) None
-    else Some(warm.computeIfAbsent((plan.canonicalized, TagRows), _ => df.collect())
-      .asInstanceOf[Array[Row]])
-  }
+    * `None` when over budget, over [[RowCap]] rows (the estimate of a
+    * well-compressed file can be far below its decoded size) or local
+    * execution is disabled — the caller runs its pruned-scan /
+    * distributed formulation unchanged. */
+  def warmRows(df: DataFrame): Option[Array[Row]] =
+    admitByStats(df.sparkSession, df.queryExecution.optimizedPlan)
+      .flatMap(collected(df, TagRows, _)(identity)(_.length))
+
+  /** The driver copy behind a warm point read
+    * ([[org.apache.spark.sql.graft.WarmScan]]): the rows of `plan`, an
+    * optimized plan under a loaded relation's marker, collected by one job
+    * on first touch and held to the same admission as [[warmRows]]. */
+  def warmScan(spark: SparkSession, plan: LogicalPlan): Option[Array[InternalRow]] =
+    admitByStats(spark, plan).flatMap(stored(plan, TagScan, _)(
+      org.apache.spark.sql.graft.WarmScan.execute(spark, plan))(identity)(_.length))
 
   /** Public identity-memo hook for caller-DERIVED DataFrames (e.g. the
     * weighted grid edges `edges.selectExpr(src, dst, w)`): re-deriving

@@ -111,10 +111,11 @@ object GraphXBridge {
     * RDD superstep floor (no SQL planning), which is what makes a deep
     * traversal affordable on a small graph and shuffle-bounded on a
     * large one. */
-  /** Two ssp loops stay because each wins on one kind of input and the
-    * search cannot know the path depth before it starts: this one took
-    * 5.4-5.8 s vs 13-14 s on a planted 40-hop chain, while
-    * [[Traversals.shortestPathLength]] took 2.0 s vs 2.6 s on 3-hop pairs.
+  /** A second ssp loop beside [[Traversals.shortestPathLength]], kept
+    * for its bidirectional early exit (the `onRound` count below) until
+    * that loop searches from both ends. It no longer wins on depth: on a
+    * 40-hop chain planted on a 1,036,890-edge power-law graph (4 cores)
+    * it took 2.8-4.4 s against 1.8-2.3 s for the frontier rounds.
     *
     * `onRound` fires once per executed superstep (the greedyModularity
     * observer pattern — default no-op, gated callers unaffected; the

@@ -5,7 +5,8 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{col, collect_list}
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Adaptive LOCAL execution for bounded graphs — the single-job fast path
@@ -163,7 +164,7 @@ object LocalExec {
       .computeIfAbsent(tag, _ => build).asInstanceOf[T]
 
   private[graft] def clearWarm(): Unit = {
-    warm.clear(); derived.clear(); preparedByKey.clear()
+    warm.clear(); derived.clear(); preparedByKey.clear(); owned.clear()
   }
   private[graft] def warmEntries: Int = warm.size
 
@@ -269,7 +270,7 @@ object LocalExec {
     * deriving through this returns the same Dataset instance per
     * (input instance, tag) within a warm window. */
   def derive(df: DataFrame, tag: String)(build: DataFrame => DataFrame): DataFrame =
-    derivedGet[DataFrame](df, s"derive-$tag")(build(df))
+    derivedGet[DataFrame](df, s"derive-$tag")(own(build(df)))
 
   /** String-keyed prepared-relation memo — the "loaded graph" half for
     * DISTRIBUTED consumers: a derived relation (e.g. the bipartite edge
@@ -285,7 +286,62 @@ object LocalExec {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
   def prepared(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    preparedByKey.computeIfAbsent((spark, key), _ => build)
+    preparedByKey.computeIfAbsent((spark, key), _ => own(build))
+
+  /** The instances a warm-window memo hands back to every caller:
+    * [[PropertyGraph]]'s relations, [[prepared]] and [[derive]]d ones.
+    * Only such an instance reaches a later call, so only data built from
+    * one is worth holding until [[graft.Reset.clear]]. */
+  private val owned = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[DataFrame, java.lang.Boolean]()))
+
+  private[graft] def own(df: DataFrame): DataFrame = { owned.add(df); df }
+
+  /** Runs `use` over the edge relation a distributed frontier loop
+    * ([[Traversals]]) scans: the non-null (src, dst) pairs as longs,
+    * grouped on `src` into one (src, dsts) adjacency row per node and
+    * `localCheckpoint`ed. Grouping keeps one held row per node rather
+    * than per edge, and its output stays partitioned on `src` for the
+    * shuffle rounds' join. A checkpoint rather than `persist()`: a
+    * relation registered with the CacheManager is matched against the
+    * plan of every later query.
+    *
+    * For an edges instance a memo owns (the one [[PropertyGraph]]'s memo
+    * hands back), the relation is built ONCE per warm window and kept,
+    * so repeat traversals read materialized blocks instead of re-parsing
+    * and re-shuffling the source; [[graft.Reset.clear]] drops the memo
+    * and unpersists the blocks. Any other instance cannot come back, so
+    * its relation is built for this call and unpersisted after `use`,
+    * whose result must therefore not read it lazily. */
+  private[graph] def frontierEdges[T](edges: DataFrame, numParts: Int)(use: DataFrame => T): T = {
+    def build: DataFrame = {
+      val e = preparedEdges(edges)
+      (if (numParts > 0) e.repartition(numParts, col("src")) else e)
+        .groupBy(col("src")).agg(collect_list(col("dst")).as("dsts"))
+        .localCheckpoint()
+    }
+    if (owned.contains(edges)) use(derivedGet[DataFrame](edges, s"frontier-edges-$numParts")(build))
+    else {
+      val e = build
+      try use(e)
+      finally e.queryExecution.logical.foreach {
+        case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+        case _ =>
+      }
+    }
+  }
+
+  /** Ids a frontier loop may hold on the driver: the budget at 8 bytes
+    * per id; 0 when local execution is off. */
+  private[graph] def frontierCap(spark: SparkSession): Int =
+    math.max(0L, math.min(budget(spark) / 8, Int.MaxValue - 1L)).toInt
+
+  /** (node, dist) rows of a BFS: the schema of [[kHop]] and of the
+    * distributed frontier loop's results. */
+  private[graph] val HopSchema = StructType(Seq(
+    StructField("node", LongType, nullable = false),
+    StructField("dist", IntegerType, nullable = false)))
 
   /** Zero-copy-ish LocalRelation result builder: `createDataFrame` with a
     * prepared schema skips the per-call implicit-Encoder derivation that
@@ -513,8 +569,7 @@ object LocalExec {
   def kHop(edges: DataFrame, source: Long, maxHops: Int): DataFrame = {
     val out = mutable.ArrayBuffer.empty[Row]
     bfsFrom(edges, source, maxHops) { (v, hop) => out += Row(v, hop); true }
-    localDF(edges.sparkSession, StructType(Seq(StructField("node", LongType, nullable = false),
-      StructField("dist", IntegerType, nullable = false))), out.toSeq)
+    localDF(edges.sparkSession, HopSchema, out.toSeq)
   }
 
   /** Local twin of [[GraphXBridge.distances]]: BFS distances from `source`

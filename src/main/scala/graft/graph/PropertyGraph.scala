@@ -46,7 +46,11 @@ object PropertyGraph {
 
   private def memoized(spark: SparkSession, key: String)
                       (build: => PropertyGraph): PropertyGraph =
-    memo.computeIfAbsent((spark, key), _ => build)
+    memo.computeIfAbsent((spark, key), _ => {
+      val g = build
+      LocalExec.own(g.nodes); LocalExec.own(g.edges)
+      g
+    })
 
   /** Bipartite order graph: customers ∪ suppliers, one edge per distinct
     * (customer, supplier) purchase relation in `lineitem ⋈ orders`.

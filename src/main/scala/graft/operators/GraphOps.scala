@@ -398,8 +398,8 @@ object GraphOps {
     // reference's load_database), not the traversal — materialize it once
     // per warm window (localCheckpoint = the bench-scale stand-in for the
     // one-time parquet staging write a 100 TB pipeline would do) so each
-    // broadcast-frontier round scans materialized edge blocks instead of
-    // re-running lineitem ⋈ orders per round per pass.
+    // frontier round scans materialized edge blocks instead of re-running
+    // lineitem ⋈ orders per round per pass.
     val ue = LocalExec.prepared(spark, s"bipartite-ue-$dir") {
       val e = PropertyGraph.bipartiteEdgesRaw(spark, dir)
       e.union(e.select(col("dst").as("src"), col("src").as("dst")))
@@ -407,9 +407,9 @@ object GraphOps {
     }
     // 2-hop on a customer↔order bipartite graph: the frontier is bounded
     // tiny by construction (hop 1 = one customer's orders, hop 2 = those
-    // orders' single customer), so broadcast the frontier and stream the
-    // edge relation instead of shuffling+persisting every edge up front
-    Traversals.kHop(ue, source = 1L, maxHops = 2, broadcastFrontier = true)
+    // orders' single customer), so each round is a driver-held frontier
+    // probing the edge scan
+    Traversals.kHop(ue, source = 1L, maxHops = 2)
   }
 
   // --- G4: SSSP -------------------------------------------------------------
